@@ -19,6 +19,8 @@ per Arrow batch — not per row).
 
 from __future__ import annotations
 
+import decimal
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -28,6 +30,7 @@ from pyspark.sql import types as T
 from lsdm_motogp_data_integration_spark.operators.dedup import (
     dot_expr,
     norm_expr,
+    precast_dot,
 )
 
 
@@ -211,6 +214,68 @@ def _nearest_cells(vecs: pd.Series, qcentroids: np.ndarray) -> np.ndarray:
     return _quantize(v) @ qcentroids.T
 
 
+def _codebook_literal(mat: np.ndarray) -> Column:
+    """The codebook as ONE plan constant: ``from_json`` over a single
+    JSON string, which the optimizer folds into one array literal.
+    Entry ``i`` carries cell ``i``'s PRE-quantized row ``q`` (operand
+    of the integer-grid argmax) and its float centroid ``c`` (operand
+    of the reported cosine). ``json.dumps`` writes each double's
+    shortest round-trip repr and the JVM parses it back to the same
+    bits, so the literal IS the numpy codebook. One string literal
+    instead of ``cells × dim`` per-element ``F.lit`` Columns keeps the
+    expression tree (and its analysis cost) O(1) in the codebook
+    size."""
+    import json
+
+    payload = json.dumps(
+        [
+            {"q": qrow.tolist(), "c": crow.tolist()}
+            for qrow, crow in zip(_quantize(mat), mat)
+        ]
+    )
+    return F.from_json(
+        F.lit(payload), "array<struct<q:array<double>,c:array<double>>>"
+    )
+
+
+def _grid(x: Column) -> Column:
+    """``np.floor(x · SIG_QUANT)`` for one array element, as a double.
+    Spark's ``floor`` returns a saturating BIGINT (NaN → 0), so values
+    outside ±2^62 — NaN, ±inf, and doubles too large to carry a
+    fraction — pass through unfloored, exactly as numpy leaves them."""
+    y = x.cast("double") * SIG_QUANT
+    return F.when(F.abs(y) < 2.0**62, F.floor(y).cast("double")).otherwise(y)
+
+
+def _nearest_cell(vec: Column, book: Column) -> Column:
+    """Built-in (JVM-side, no Python worker) nearest-cell expression
+    over an ``array<float|double>`` column and a
+    :func:`_codebook_literal`: the INT index of the FIRST cell
+    maximizing the exact integer-grid dot ``floor(v·1e6) · q_c`` — the
+    :func:`_nearest_cells` + ``np.argmax`` decision. Integer-valued
+    products summed below 2^53 are exact in any order, so the
+    sequential ``aggregate`` equals the numpy matmul bit for bit.
+    ``array_max`` over ``(sim, -cell)`` picks the largest sim and, on a
+    tie, the smallest cell (first max, == ORDER BY sim DESC, cell ASC);
+    Spark orders NaN above every number, so a NaN sim wins at its first
+    cell, as in ``np.argmax``."""
+
+    def first_max(qv: Column) -> Column:
+        sims = F.transform(
+            book,
+            lambda e, i: F.struct(
+                precast_dot(qv, e["q"]).alias("sim"), (-i).alias("neg_cell")
+            ),
+        )
+        return -F.array_max(sims)["neg_cell"]
+
+    # transform over a one-element array binds the row's grid vector
+    # once: a lambda body re-evaluates any row expression it references,
+    # so naming ``transform(vec, _grid)`` inside it would re-quantize
+    # the vector for every cell
+    return F.transform(F.array(F.transform(vec, _grid)), first_max)[0]
+
+
 # Lloyd training sample bound, per centroid: the codebook is fit on
 # the `TRAIN_SAMPLE_FACTOR * n_cells` smallest md5('ivf|'||id) rows
 # instead of the full corpus — k-means needs a few dozen points per
@@ -221,7 +286,9 @@ def _nearest_cells(vecs: pd.Series, qcentroids: np.ndarray) -> np.ndarray:
 TRAIN_SAMPLE_FACTOR = 32
 
 
-_DEC12 = None  # lazy: decimal context objects built once
+_DEC12 = decimal.Decimal("1e-12")
+# below the |x| < 1e16 bound a scale-12 value has at most 28 digits
+_DEC_CTX = decimal.Context(prec=28, rounding=decimal.ROUND_HALF_UP)
 
 
 def _cast_dec12(x: float):
@@ -232,56 +299,44 @@ def _cast_dec12(x: float):
     HALF_UP to scale 12. Bit-parity is pinned by the
     local-vs-distributed trainer equivalence test.
 
-    Precision bound (ADVICE r9): decimal(28,12) holds 16 integer
-    digits — Spark's cast OVERFLOWS (ANSI error) for |x| >= 1e16,
+    Precision bound: decimal(28,12) holds 16 integer digits — Spark's
+    cast OVERFLOWS (ANSI error) for |x| >= 1e16 (and for NaN/±inf),
     while a plain quantize would happily return a wider Decimal and
-    silently break the claimed local==distributed bit-parity. Raise
-    the same way the distributed path would fail instead."""
-    global _DEC12
-    import decimal
-
-    if _DEC12 is None:
-        _DEC12 = decimal.Decimal("1e-12")
-    # quantize under a wide local context: the default context's
-    # 28-digit precision would raise a bare InvalidOperation for wide
-    # values before the explicit bound check below can name the cause
-    with decimal.localcontext() as ctx:
-        ctx.prec = 60
-        d = decimal.Decimal(repr(float(x))).quantize(
-            _DEC12, rounding=decimal.ROUND_HALF_UP
-        )
-    if abs(d) >= decimal.Decimal(10) ** 16:
+    silently break the claimed local==distributed bit-parity. The
+    bound is checked on the exact decimal BEFORE quantizing, so every
+    out-of-range value — 1e20 and 1e300 alike — raises the same
+    explained error instead of a bare ``decimal.InvalidOperation``."""
+    d = decimal.Decimal(repr(float(x)))
+    if not d.is_finite() or abs(d) >= 10**16:
         raise ArithmeticError(
             f"value {x!r} overflows decimal(28,12) — the distributed "
             "Lloyd round would fail this cast under ANSI mode; "
             "normalize/scale the vectors (|x| < 1e16) before training"
         )
-    return d
+    return d.quantize(_DEC12, context=_DEC_CTX)
 
 
 def _lloyd_round_local(
-    vmat: np.ndarray, mat: np.ndarray, n_cells: int
+    vmat: np.ndarray, dmat: np.ndarray, mat: np.ndarray, n_cells: int
 ) -> np.ndarray:
     """One driver-local Lloyd round over a collected training sample —
     the exact arithmetic of the distributed round (integer-grid argmax
     assignment with first-max tie-break, decimal(28,12)-exact
     element-wise sums, one IEEE double division, zero-norm-guarded
-    renormalization)."""
-    import decimal
-
+    renormalization). ``dmat`` is ``vmat`` already cast element-wise
+    with :func:`_cast_dec12` (an object array of Decimals): the sample
+    is fixed across rounds, so the caller casts it once per training
+    run, not once per round."""
     sims = _quantize(vmat) @ _quantize(mat).T
     cells = np.argmax(sims, axis=1)
     new_mat = mat.copy()
     for c in range(n_cells):
-        members = vmat[cells == c]
+        members = dmat[cells == c]
         if len(members) == 0:
             continue  # a cell that captured no vectors keeps its centroid
         cnt = float(len(members))
         for pos in range(members.shape[1]):
-            s = sum(
-                (_cast_dec12(x) for x in members[:, pos]),
-                decimal.Decimal(0),
-            )
+            s = sum(members[:, pos], decimal.Decimal(0))
             new_mat[c, pos] = float(s) / cnt
     return _normalize_rows(new_mat)
 
@@ -295,19 +350,22 @@ def _train_centroids(
     train_sample: int | None = None,
 ) -> np.ndarray:
     """Deterministic k-means codebook: hash-sample init + ``n_iters``
-    Lloyd rounds as distributed DataFrame jobs — over a BOUNDED,
-    deterministic training sample (the ``train_sample`` smallest
-    ``md5('ivf|' || id)`` rows; default ``TRAIN_SAMPLE_FACTOR *
-    n_cells``, ``0`` = full corpus).  The sample is taken with one
-    distributed TakeOrdered and pinned with an eager localCheckpoint,
-    so each Lloyd round is a job over O(train_sample) rows no matter
-    how large the corpus is — codebook fitting stops scanning the
-    full corpus per round.  Each round: one assignment pass
-    (vectorized UDF, broadcast centroid matrix) and one element-wise
-    mean (posexplode → decimal(28,12)-exact sum ÷ count — immune to
-    float summation-order differences). Only O(n_cells × dim) mean
-    rows ever reach the driver; cells that lose all members keep
-    their previous centroid.
+    Lloyd rounds over a BOUNDED, deterministic training sample (the
+    ``train_sample`` smallest ``md5('ivf|' || id)`` rows; default
+    ``TRAIN_SAMPLE_FACTOR * n_cells``, ``0`` = full corpus).
+
+    With a bounded sample, one distributed TakeOrdered collects it and
+    the rounds run driver-locally (:func:`_lloyd_round_local`; the
+    sample is cast to decimal(28,12) once per call, not per round), so
+    training cost is O(train_sample) no matter how large the corpus
+    is. With ``train_sample=0`` each round is one DataFrame job: the
+    built-in assignment expression (:func:`_nearest_cell`, the
+    codebook as one plan constant — no Python worker) and an
+    element-wise mean (posexplode → decimal(28,12)-exact sum ÷ count —
+    immune to float summation-order differences). Both paths perform
+    the same arithmetic and return bit-identical codebooks (pinned by
+    test). Only O(n_cells × dim) mean rows ever reach the driver; cells
+    that lose all members keep their previous centroid.
 
     Every step is *portable* (SQL-replayable, engine-independent):
     init AND the training sample order by ``md5('ivf|' || id)`` hex
@@ -359,8 +417,11 @@ def _train_centroids(
         vmat = np.vstack(
             [np.asarray(r[vec_col], dtype=np.float64) for r in rows]
         )
+        dmat = np.array(
+            [[_cast_dec12(x) for x in row] for row in vmat], dtype=object
+        ).reshape(vmat.shape)
         for _ in range(n_iters):
-            mat = _lloyd_round_local(vmat, mat, n_cells)
+            mat = _lloyd_round_local(vmat, dmat, mat, n_cells)
         return mat
     train_df = ranked
     # id tie-break: md5 collisions are not the concern — DUPLICATE
@@ -384,15 +445,9 @@ def _train_centroids(
     dim = mat.shape[1]
 
     for _ in range(n_iters):
-        qcurrent = _quantize(mat)
-
-        @F.pandas_udf(T.IntegerType())
-        def nearest(vecs: pd.Series) -> pd.Series:
-            sims = _nearest_cells(vecs, qcurrent)
-            return pd.Series(np.argmax(sims, axis=1).astype(np.int32))
-
+        cell = _nearest_cell(F.col(vec_col), _codebook_literal(mat))
         means = (
-            train_df.select(nearest(F.col(vec_col)).alias("__cell"), vec_col)
+            train_df.select(cell.alias("__cell"), vec_col)
             .select(
                 "__cell",
                 F.posexplode(F.col(vec_col).cast("array<double>")).alias(
@@ -634,6 +689,45 @@ def _resolve_books(precomputed, df) -> "list[np.ndarray] | None":
     return [np.asarray(b, dtype=np.float64) for b in precomputed]
 
 
+def with_kmeans_clusters(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    *,
+    n_clusters: int = 8,
+    n_iters: int = 3,
+    train_sample: int | None = None,
+    precomputed_codebook: "np.ndarray | str | None" = None,
+) -> DataFrame:
+    """``df`` (null-vector rows dropped) plus ``cluster`` BIGINT and
+    ``centroid_sim`` DOUBLE columns — :func:`kmeans_clusters` as a
+    projection on the input itself, so a caller that needs the
+    clusters NEXT TO its own columns (``dedup.semdedup``) adds them
+    without joining an id-keyed assignment back to the corpus. One row
+    out per row in; ``id_col`` only keys the training sample."""
+    df = _drop_null_vecs(df, vec_col)
+    mat = _resolve_codebook(precomputed_codebook, df)
+    if mat is None:
+        mat = _train_centroids(
+            df, vec_col, id_col, n_clusters, n_iters, train_sample
+        )
+    book = _codebook_literal(mat)
+    vec = F.col(vec_col)
+    centroid = F.element_at(book, F.col("cluster").cast("int") + 1)["c"]
+    # two projections: ``cluster`` is read twice by the second, so the
+    # optimizer keeps it computed once instead of inlining the argmax
+    return df.withColumn(
+        "cluster", _nearest_cell(vec, book).cast("bigint")
+    ).withColumn(
+        "centroid_sim",
+        F.round(
+            dot_expr(vec, centroid)
+            / F.greatest(norm_expr(vec), F.lit(1e-12)),
+            6,
+        ),
+    )
+
+
 def kmeans_clusters(
     df: DataFrame,
     vec_col: str,
@@ -646,57 +740,38 @@ def kmeans_clusters(
 ) -> DataFrame:
     """Document clustering over an embedding column: deterministic
     k-means sharing the IVF codebook trainer (:func:`_train_centroids`
-    — hash-sample init, Lloyd rounds as DataFrame jobs over a bounded
-    ``train_sample`` (default ``TRAIN_SAMPLE_FACTOR * n_clusters``,
-    ``0`` = full corpus) with decimal-exact cell means, zero-norm
-    guards). Used in curation for topic balancing, per-cluster quotas,
-    and diversity-aware sampling.
+    — hash-sample init, Lloyd rounds over a bounded ``train_sample``
+    (default ``TRAIN_SAMPLE_FACTOR * n_clusters``, ``0`` = full
+    corpus) with decimal-exact cell means, zero-norm guards). Used in
+    curation for topic balancing, per-cluster quotas, and
+    diversity-aware sampling.
 
-    The centroid matrix is O(n_clusters × dim) broadcast metadata; the
-    assignment pass is one Arrow-vectorized projection — no shuffle at
-    all. Deterministic across runs and partition layouts, AND portable:
-    md5 init + integer-grid assignment + decimal-exact means make the
-    whole Lloyd loop SQL-replayable (the q68 DuckDB oracle unrolls it).
+    The centroid matrix is O(n_clusters × dim) driver metadata that
+    enters the plan as ONE folded constant; the assignment is a single
+    built-in array expression (:func:`_nearest_cell` — integer-grid
+    dots via ``zip_with``/``aggregate``, first-max ``array_max``)
+    evaluated in the JVM: no Python worker, no shuffle, no join.
+    Deterministic across runs and partition layouts, AND portable: md5
+    init + integer-grid assignment + decimal-exact means make the whole
+    Lloyd loop SQL-replayable (the q68 DuckDB oracle unrolls it).
 
-    Returns (id_col, cluster BIGINT, centroid_sim DOUBLE rounded 6dp).
+    Returns (id_col, cluster BIGINT, centroid_sim DOUBLE) —
+    ``centroid_sim`` is the float cosine to the chosen centroid rounded
+    to 6dp, the repo's cross-engine float convention (q26).
 
     ``precomputed_codebook`` (matrix or :func:`save_codebook` path)
     skips training entirely — the train-once-reuse path for a corpus
     queried repeatedly; results are bit-identical to the run that
     trained the codebook (pinned by test)."""
-    df = _drop_null_vecs(df, vec_col)
-    mat = _resolve_codebook(precomputed_codebook, df)
-    if mat is None:
-        mat = _train_centroids(
-            df, vec_col, id_col, n_clusters, n_iters, train_sample
-        )
-    qmat = _quantize(mat)
-
-    @F.pandas_udf("cluster bigint, centroid_sim double")
-    def assign(vecs: pd.Series) -> pd.DataFrame:
-        # cluster choice on the exact integer grid (portable); the
-        # reported similarity as plain float cosine rounded to 6dp —
-        # the repo's cross-engine float convention (q26). Only the
-        # CHOSEN centroid's dot is computed (row-wise einsum), not the
-        # full rows × n_clusters float matmul a second time
-        qsims = _nearest_cells(vecs, qmat)
-        best = np.argmax(qsims, axis=1)
-        v = np.vstack([np.asarray(x, dtype=np.float64) for x in vecs])
-        norms = np.maximum(np.linalg.norm(v, axis=1), 1e-12)
-        sims = np.einsum("ij,ij->i", v, mat[best]) / norms
-        return pd.DataFrame(
-            {
-                "cluster": best.astype(np.int64),
-                "centroid_sim": np.round(sims, 6),
-            }
-        )
-
-    out = df.select(id_col, assign(F.col(vec_col)).alias("__a"))
-    return out.select(
+    return with_kmeans_clusters(
+        df.select(id_col, vec_col),
+        vec_col,
         id_col,
-        F.col("__a.cluster").alias("cluster"),
-        F.col("__a.centroid_sim").alias("centroid_sim"),
-    )
+        n_clusters=n_clusters,
+        n_iters=n_iters,
+        train_sample=train_sample,
+        precomputed_codebook=precomputed_codebook,
+    ).select(id_col, "cluster", "centroid_sim")
 
 
 def _cells_udf(qmat: np.ndarray, n_top: int):

@@ -70,11 +70,19 @@ def remove_boilerplate_lines(
     are result-identical (pinned by test), so auto never changes
     output. The assert bounds the broadcast/driver exposure; a corpus
     adversarial enough to blow the collect_list aggregation buffer
-    itself should run ``broadcast_frequent=False`` outright.
+    itself should run ``broadcast_frequent=False`` outright. Any string
+    other than ``"auto"`` raises ``ValueError``.
 
     ``persist_lines=True`` persists the tokenized array relation
     (two consumers: frequency aggregate and rebuild).
     """
+    if isinstance(broadcast_frequent, str) and broadcast_frequent != "auto":
+        # a typo like "Auto" or "false" is a truthy string: refuse it
+        # instead of silently taking the broadcast path
+        raise ValueError(
+            "broadcast_frequent must be True, False or 'auto', got "
+            f"{broadcast_frequent!r}"
+        )
     split_expr = F.split(F.col(text_col), re.escape(sep))
     # null-text rows produce no `lines` rows in the relational form and
     # therefore no output row — replicate by filtering them out

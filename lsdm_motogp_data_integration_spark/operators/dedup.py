@@ -22,6 +22,8 @@ Scale design notes
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
@@ -220,18 +222,36 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+_BYTE_UNITS = {
+    "": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20,
+    "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40,
+    "tb": 1 << 40, "p": 1 << 50, "pb": 1 << 50,
+}
+
+
+def _size_bytes(v: str) -> int | None:
+    """Bytes in a Spark size conf (``134217728``, ``128m``, ``1t``,
+    ``2pb`` — the units of Spark's ``byteStringAs``); ``None`` when
+    the value does not parse."""
+    m = re.fullmatch(r"(\d+(?:\.\d+)?)([a-z]*)", v.strip().lower())
+    if m is None or m.group(2) not in _BYTE_UNITS:
+        return None
+    return int(float(m.group(1)) * _BYTE_UNITS[m.group(2)])
+
+
 def _estimated_scan_width(df: DataFrame) -> int | None:
     """Estimate a file-backed relation's scan parallelism from its
     input files — replicating Spark's split sizing
     (``maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
     (bytes + files·openCost) / minPartitionNum))``) with pure local
     ``os.stat`` calls.  Returns ``None`` when the relation has no
-    visible local files (in-memory lineage, remote storage) — callers
-    fall back to the exact ``df.rdd`` probe.  Exists because
-    ``df.rdd.getNumPartitions()`` runs full physical planning (a plan
-    conversion per call, ~50–100 ms measured in r9's profile) while
-    the widen decision only needs a coarse estimate (guide §5: keep
-    plan-time driver work off repeated query paths)."""
+    visible local files (in-memory lineage, remote storage) or a size
+    conf does not parse — callers fall back to the exact ``df.rdd``
+    probe.  Exists because ``df.rdd.getNumPartitions()`` runs full
+    physical planning (a plan conversion per call, ~50–100 ms measured
+    in r9's profile) while the widen decision only needs a coarse
+    estimate (guide §5: keep plan-time driver work off repeated query
+    paths)."""
     import os
     from urllib.parse import unquote, urlparse
 
@@ -241,23 +261,14 @@ def _estimated_scan_width(df: DataFrame) -> int | None:
     spark = df.sparkSession
     conf = spark.conf
 
-    def _size_bytes(v: str) -> int:
-        v = v.strip().lower()
-        for suf, mult in (
-            ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
-            ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-            ("b", 1),
-        ):
-            if v.endswith(suf):
-                return int(float(v[: -len(suf)]) * mult)
-        return int(v)
-
     max_pb = _size_bytes(
         conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     )
     open_cost = _size_bytes(
         conf.get("spark.sql.files.openCostInBytes", "4194304")
     )
+    if max_pb is None or open_cost is None:
+        return None  # unparseable conf: let the exact probe decide
     min_parts = int(
         conf.get(
             "spark.sql.files.minPartitionNum",
@@ -1951,8 +1962,11 @@ def semdedup(
     flat — the 20× probe in SCALE.md pins this). Training cost stays
     bounded regardless (sample-bounded Lloyd).
     Composition of two verified parts: the shared
-    deterministic k-means trainer (``ann.kmeans_clusters`` — sample-
-    bounded Lloyd, broadcast codebook, shuffle-free assignment) and the
+    deterministic k-means trainer and assignment
+    (``ann.with_kmeans_clusters`` — sample-bounded Lloyd, the codebook
+    as one plan constant, a built-in array expression that adds
+    ``cluster`` to the corpus as a projection: no Python worker and no
+    join of an id-keyed assignment back onto the corpus) and the
     blocked pair scorer (:func:`embedding_neardup_pairs` with
     ``block_col='cluster'``). Fully engine-replayable: the q27 oracle
     unrolls the same Lloyd codebook and recomputes the within-cluster
@@ -1963,19 +1977,17 @@ def semdedup(
     where ``dup_of`` is the smallest same-cluster near-duplicate id
     (null for survivors) and ``keep = dup_of IS NULL``."""
     from lsdm_motogp_data_integration_spark.operators.ann import (
-        kmeans_clusters,
+        with_kmeans_clusters,
     )
 
-    df = df.filter(F.col(vec_col).isNotNull())
-    clusters = kmeans_clusters(
+    with_c = with_kmeans_clusters(
         df,
         vec_col,
         id_col,
         n_clusters=n_clusters,
         n_iters=n_iters,
         train_sample=train_sample,
-    ).select(id_col, "cluster")
-    with_c = df.join(clusters, id_col)
+    ).drop("centroid_sim")
     pairs = embedding_neardup_pairs(
         with_c, vec_col, id_col, block_col="cluster", threshold=threshold
     )
