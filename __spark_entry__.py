@@ -219,31 +219,6 @@ def q09_position_counts_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def q10_position_counts_conditional(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The Spark-first collapse of q09: one pass of conditional
-    aggregation replaces filter-cascade + 4 group-bys + 5-way join
-    (SURVEY §2.4 — same result, one shuffle instead of five). Not in
-    the driver registry (q09 carries the correctness row); equivalence
-    and the strictly-fewer-shuffles property are pinned in
-    tests/test_plans.py and tests/test_motogp_pipelines.py."""
-    li = read_table(spark, sf_dir, "lineitem")
-    s = read_table(spark, sf_dir, "supplier")
-    counts = li.groupBy("l_suppkey").agg(
-        F.count(F.when(F.col("l_linenumber") == 1, 1)).alias("pos1"),
-        F.count(F.when(F.col("l_linenumber") == 2, 1)).alias("pos2"),
-        F.count(F.when(F.col("l_linenumber") == 3, 1)).alias("pos3"),
-        F.count(
-            F.when(~F.col("l_linenumber").isin(1, 2, 3), 1)
-        ).alias("other_pos"),
-    )
-    return (
-        s.join(counts, s.s_suppkey == counts.l_suppkey, "inner")
-        .select("s_suppkey", "s_name", "pos1", "pos2", "pos3", "other_pos")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Aggregation + window rank (SURVEY §2.4, §2.5) — the flagship
 # ---------------------------------------------------------------------------

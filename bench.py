@@ -40,9 +40,9 @@ HEADLINE = [
     "q67_span_dedup",
 ]
 def _scope_values(name: str, tag: str) -> list[str]:
-    """Scope literals of a suite, extracted from its oracle SQL — the
-    same two regexes tools/registry_doc.py uses for REGISTRY.md (the
-    oracle is the source of truth for what a suite contains)."""
+    """Scope literals of a suite, extracted from its oracle SQL (the
+    oracle is the source of truth for what a suite contains);
+    tools/registry_doc.py lists the same scopes in REGISTRY.md."""
     sql = entry_mod.oracle_sql().get(name, "")
     found = set(
         re.findall(

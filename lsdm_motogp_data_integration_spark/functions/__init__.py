@@ -3,7 +3,8 @@
 Replaces the reference's Kettle scalar steps (StringOperations,
 ReplaceString, ConcatFields, FieldSplitter — SURVEY.md §2.8) and its
 FuzzyMatch similarity measure (``motogp.ktr:3042``) with Spark built-ins
-plus a vectorized Jaro-Winkler Pandas UDF.
+plus a vectorized Jaro-Winkler Pandas UDF — the one Jaro-Winkler scorer
+in plans, checked against the pure-Python ``jaro_winkler_similarity``.
 """
 
 from lsdm_motogp_data_integration_spark.functions.similarity import (

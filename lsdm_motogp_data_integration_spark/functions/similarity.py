@@ -85,169 +85,6 @@ def jaro_winkler_similarity(
     return jaro + prefix * prefix_scale * (1.0 - jaro)
 
 
-def _bit(mask, k):
-    """mask & (1 << (k-1)) as a long — k is a 1-based position Column.
-    call_function keeps the shift a single JVM expression node (the
-    pyspark ``shiftleft`` wrapper only takes Python-int shift counts,
-    and a literal powers-of-two array would inline 63 literal nodes at
-    every use, bloating the tree Catalyst has to canonicalize)."""
-    return mask.bitwiseAND(
-        F.call_function("shiftleft", F.lit(1).cast("long"), (k - 1).cast("int"))
-    )
-
-
-def jaro_winkler_col(left, right):
-    """Jaro-Winkler as a pure JVM-side Column expression (no Python).
-
-    The greedy match loop folds over the 1..len(left) character
-    positions with constant-size state — two LONG bitmasks of matched
-    positions — so the whole computation stays JVM-side: no Arrow
-    transfer, no Python worker in the plan. Values match the
-    pure-Python reference (and DuckDB's ``jaro_winkler_similarity``)
-    exactly; property-tested against both.
-
-    Scope: strings up to 63 characters (the bitmask width); longer
-    inputs raise at evaluation time rather than scoring approximately —
-    use ``jaro_winkler_udf`` (Arrow-batched) for long-string corpora.
-    Higher-order functions are CodegenFallback (interpreted), costing
-    ~ms per pair: right for dimension×dimension matches (≲10⁴ pairs)
-    or Python-free runtimes; the pandas UDF is the bulk path.
-    Inputs are lowered here (the reference's FuzzyMatch is
-    case-insensitive); pre-normalize for other case semantics.
-    """
-    s1 = F.lower(left)
-    s2 = F.lower(right)
-    len1 = F.length(s1)
-    len2 = F.length(s2)
-    # match window: max(len1, len2) // 2 - 1, floored at 0
-    w = F.greatest(
-        (F.floor(F.greatest(len1, len2) / 2) - 1).cast("int"), F.lit(0)
-    )
-
-    def bounded_seq(lo, hi):
-        # Spark's sequence(lo, hi) runs DESCENDING when lo > hi (Python's
-        # range is empty there) — guard empty windows explicitly
-        return F.when(lo <= hi, F.sequence(lo, hi)).otherwise(
-            F.array().cast("array<int>")
-        )
-
-    # fold state = (m1, m2) LONG bitmasks of matched s1 / s2 positions.
-    # The matched-j lookup is bound ONCE per step via a 1-element
-    # transform (HOF lambdas have no let-binding; inlining the search in
-    # both struct fields would double the interpreted work and the tree)
-    state = F.aggregate(
-        bounded_seq(F.lit(1), len1),
-        F.struct(
-            F.lit(0).cast("long").alias("m1"),
-            F.lit(0).cast("long").alias("m2"),
-        ),
-        lambda acc, i: F.element_at(
-            F.transform(
-                F.array(
-                    F.array_min(
-                        F.filter(
-                            bounded_seq(
-                                F.greatest(F.lit(1), i - w),
-                                F.least(len2, i + w),
-                            ),
-                            lambda j: (
-                                s2.substr(j, F.lit(1))
-                                == s1.substr(i, F.lit(1))
-                            )
-                            & (_bit(acc["m2"], j) == F.lit(0).cast("long")),
-                        )
-                    )
-                ),
-                lambda j: F.struct(
-                    F.when(j.isNull(), acc["m1"])
-                    .otherwise(
-                        acc["m1"].bitwiseOR(
-                            F.call_function(
-                                "shiftleft",
-                                F.lit(1).cast("long"),
-                                (i - 1).cast("int"),
-                            )
-                        )
-                    )
-                    .alias("m1"),
-                    F.when(j.isNull(), acc["m2"])
-                    .otherwise(
-                        acc["m2"].bitwiseOR(
-                            F.call_function(
-                                "shiftleft",
-                                F.lit(1).cast("long"),
-                                (j - 1).cast("int"),
-                            )
-                        )
-                    )
-                    .alias("m2"),
-                ),
-            ),
-            F.lit(1),
-        ),
-    )
-
-    def chars_at_set_bits(s, length, mask):
-        # ascending-position order: for s1 that IS match order (the
-        # greedy loop walks i ascending); for s2 it is the Jaro spec
-        return F.transform(
-            F.filter(
-                bounded_seq(F.lit(1), length),
-                lambda k: _bit(mask, k) != F.lit(0).cast("long"),
-            ),
-            lambda k: s.substr(k, F.lit(1)),
-        )
-
-    m1 = chars_at_set_bits(s1, len1, state["m1"])
-    m2 = chars_at_set_bits(s2, len2, state["m2"])
-    matches = F.size(m1).cast("double")
-    # pairwise-different matched chars, halved (integer division)
-    half_transpositions = F.floor(
-        F.size(F.filter(F.zip_with(m1, m2, lambda x, y: x != y), lambda b: b))
-        / 2
-    ).cast("double")
-    jaro_core = (
-        matches / len1.cast("double")
-        + matches / len2.cast("double")
-        + (matches - half_transpositions) / matches
-    ) / F.lit(3.0)
-    jaro = (
-        F.when((len1 == 0) | (len2 == 0), F.lit(0.0))
-        .when(s1 == s2, F.lit(1.0))
-        .when(
-            F.greatest(len1, len2) > F.lit(63),
-            F.raise_error(
-                F.lit(
-                    "jaro_winkler_col supports strings up to 63 chars "
-                    "(bitmask state); use jaro_winkler_udf for longer"
-                )
-            ).cast("double"),
-        )
-        .when(F.size(m1) == 0, F.lit(0.0))
-        .otherwise(jaro_core)
-    )
-    # Winkler prefix boost above the 0.7 threshold (prefix cap 4):
-    # count of i in 1..4 with all chars up to i equal == prefix length
-    prefix = F.size(
-        F.filter(
-            bounded_seq(F.lit(1), F.least(F.least(len1, len2), F.lit(4))),
-            lambda i: F.aggregate(
-                F.sequence(F.lit(1), i),
-                F.lit(True),
-                lambda acc, k: acc
-                & (s1.substr(k, F.lit(1)) == s2.substr(k, F.lit(1))),
-            ),
-        )
-    ).cast("double")
-    # null-in -> null-out (matches the pandas UDF); without the guard a
-    # null length falls through the CaseWhen chain and would score 0.0
-    return (
-        F.when(s1.isNull() | s2.isNull(), F.lit(None).cast("double"))
-        .when(jaro > F.lit(0.7), jaro + prefix * F.lit(0.1) * (F.lit(1.0) - jaro))
-        .otherwise(jaro)
-    )
-
-
 @F.pandas_udf(T.DoubleType())
 def jaro_winkler_udf(left: pd.Series, right: pd.Series) -> pd.Series:
     """Vectorized (Arrow-batched) Jaro-Winkler over two string columns.

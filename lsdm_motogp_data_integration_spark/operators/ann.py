@@ -289,6 +289,9 @@ TRAIN_SAMPLE_FACTOR = 32
 _DEC12 = decimal.Decimal("1e-12")
 # below the |x| < 1e16 bound a scale-12 value has at most 28 digits
 _DEC_CTX = decimal.Context(prec=28, rounding=decimal.ROUND_HALF_UP)
+# Spark sums decimal(28,12) into decimal(38,12): a 38-digit context
+# keeps the driver-local sum exact where the default 28 digits round
+_SUM_CTX = decimal.Context(prec=38)
 
 
 def _cast_dec12(x: float):
@@ -321,8 +324,9 @@ def _lloyd_round_local(
 ) -> np.ndarray:
     """One driver-local Lloyd round over a collected training sample —
     the exact arithmetic of the distributed round (integer-grid argmax
-    assignment with first-max tie-break, decimal(28,12)-exact
-    element-wise sums, one IEEE double division, zero-norm-guarded
+    assignment with first-max tie-break, element-wise sums of the
+    decimal(28,12) values kept exact in 38 digits like Spark's
+    decimal(38,12) sum, one IEEE double division, zero-norm-guarded
     renormalization). ``dmat`` is ``vmat`` already cast element-wise
     with :func:`_cast_dec12` (an object array of Decimals): the sample
     is fixed across rounds, so the caller casts it once per training
@@ -335,9 +339,10 @@ def _lloyd_round_local(
         if len(members) == 0:
             continue  # a cell that captured no vectors keeps its centroid
         cnt = float(len(members))
-        for pos in range(members.shape[1]):
-            s = sum(members[:, pos], decimal.Decimal(0))
-            new_mat[c, pos] = float(s) / cnt
+        with decimal.localcontext(_SUM_CTX):
+            for pos in range(members.shape[1]):
+                s = sum(members[:, pos], decimal.Decimal(0))
+                new_mat[c, pos] = float(s) / cnt
     return _normalize_rows(new_mat)
 
 

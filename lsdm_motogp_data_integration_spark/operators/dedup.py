@@ -453,8 +453,6 @@ def containment_pairs(
     threshold: float = 0.8,
     sets_df: DataFrame | None = None,
     candidates_only: bool = False,
-    containing_prefilter: str | None = None,
-    prefilter_fpp: float = 0.01,
 ) -> DataFrame:
     """DIRECTED near-containment pairs: (id_a, id_b, containment) with
     ``|S_a ∩ S_b| / |S_a| >= threshold`` and ``id_a != id_b`` — doc a
@@ -482,29 +480,7 @@ def containment_pairs(
     cross product anywhere.
 
     ``sets_df``: a prepared :func:`shingle_sets` relation (suite
-    sharing — same contract as :func:`jaccard_pairs`).
-
-    ``containing_prefilter`` (r10, guide §3.2): the containing side
-    cannot prune by the prefix theorem, so its FULL gram index flows
-    into the candidate join — at cluster scale that is the dominant
-    shuffle of the whole operator (the prefix side is ~(1−t) of it).
-    ``"bloom"`` builds a Bloom filter over the distinct prefix grams
-    (2–3 build-time jobs; ~10 bits per distinct prefix gram at the
-    default 1% fpp) and drops non-matching grams from each containing
-    set ROW-LOCALLY, before the explode, so only grams that can
-    possibly match a prefix are exploded and shuffled. EXACT
-    regardless of fpp: a false positive just rides into the equi-join
-    and finds no match there (results pinned equal by test). ``"off"``
-    (the local default) skips it — on a single box the candidate join
-    broadcasts the prefix side and the containing side never shuffles,
-    so the probe would be pure overhead. ``None`` resolves from the
-    session conf ``spark.graft.containment.prefilter`` (default
-    ``off``); set it to ``bloom`` on clusters where the prefix-side
-    explode exceeds the broadcast threshold (the filter itself must
-    fit on the driver/executors: ~1.2 GB per 10^9 distinct prefix
-    grams — shard the corpus first past that). When enabling it, pass
-    a persisted ``sets_df``: the filter build is one extra pass over
-    the prefix relation."""
+    sharing — same contract as :func:`jaccard_pairs`)."""
     if sets_df is not None:
         sets_df = sets_df.select(
             F.col(id_col).alias("__id"), F.col("shingles").alias("__set")
@@ -526,40 +502,11 @@ def containment_pairs(
         min_inter.alias("__need"),
         F.explode(F.slice("__set", 1, prefix_len)).alias("__gram"),
     )
-    if containing_prefilter is None:
-        containing_prefilter = (
-            (sets_df if sets_df is not None else df)
-            .sparkSession.conf.get(
-                "spark.graft.containment.prefilter", "off"
-            )
-        )
-    if containing_prefilter == "bloom":
-        from lsdm_motogp_data_integration_spark.operators.membership import (
-            build_bloom,
-            might_contain,
-        )
-
-        spec = build_bloom(
-            prefixes.select("__gram"), "__gram", fpp=prefilter_fpp
-        )
-        full = sets_df.select(
-            F.col("__id").alias("__idb"),
-            F.size("__set").alias("__nb"),
-            F.explode(
-                F.filter("__set", lambda g: might_contain(spec, g))
-            ).alias("__gram"),
-        )
-    elif containing_prefilter == "off":
-        full = sets_df.select(
-            F.col("__id").alias("__idb"),
-            F.size("__set").alias("__nb"),
-            F.explode("__set").alias("__gram"),
-        )
-    else:
-        raise ValueError(
-            "containing_prefilter must be bloom|off, got "
-            f"{containing_prefilter!r}"
-        )
+    full = sets_df.select(
+        F.col("__id").alias("__idb"),
+        F.size("__set").alias("__nb"),
+        F.explode("__set").alias("__gram"),
+    )
     candidates = (
         prefixes.join(full, "__gram")
         .filter(
@@ -1794,14 +1741,6 @@ def norm_expr(a: Column) -> Column:
     """Float64 L2 norm of an ``array<float|double>`` column."""
     af = F.transform(a, lambda x: x.cast("double"))
     return F.sqrt(F.aggregate(af, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def cosine_expr(a: Column, b: Column) -> Column:
-    """Cosine similarity, float64. For pairwise scans prefer
-    precomputing :func:`norm_expr` per row before the join (the
-    ``dot / (norm_a * norm_b)`` result is bit-identical) — this full
-    expression recomputes both norms per pair."""
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
 def precast_dot(a: Column, b: Column) -> Column:

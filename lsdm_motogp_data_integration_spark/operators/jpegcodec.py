@@ -304,16 +304,6 @@ def _split_entropy(
     return [s.replace(b"\xff\x00", b"\xff") for s in segs], marks, end
 
 
-def _extend(v: int, size: int) -> int:
-    """T.81 F.2.2.1 EXTEND: map the raw `size`-bit magnitude to the
-    signed coefficient value."""
-    if size == 0:
-        return 0
-    if v < (1 << (size - 1)):
-        return v - (1 << size) + 1
-    return v
-
-
 def _decode_scan_segment(
     seg: bytes,
     order: list[tuple[int, tuple[list[int], list[int]], tuple[list[int], list[int]], int]],

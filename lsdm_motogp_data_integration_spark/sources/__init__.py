@@ -274,21 +274,6 @@ def write_table_zordered(
     )
 
 
-def read_orc(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    """ORC scan (columnar, pushdown-capable like parquet)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
-
-
-def write_orc(df: DataFrame, path: str, *, partition_by: list[str] | None = None) -> None:
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
 def write_bucketed_table(
     df: DataFrame,
     table: str,

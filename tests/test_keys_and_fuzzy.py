@@ -4,11 +4,16 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from lsdm_motogp_data_integration_spark.functions.similarity import (
+    jaro_winkler_similarity,
+)
+from lsdm_motogp_data_integration_spark.operators import fuzzy
 from lsdm_motogp_data_integration_spark.operators.fuzzy import similarity_join
 from lsdm_motogp_data_integration_spark.operators.keys import (
     add_surrogate_key,
     add_surrogate_key_distributed,
 )
+from lsdm_motogp_data_integration_spark.plans import formatted_plan
 from lsdm_motogp_data_integration_spark.sources import read_table
 
 
@@ -62,7 +67,16 @@ def test_fuzzy_tiebreak_deterministic(spark):
         assert out[0]["cand"] == "abx"
 
 
-def test_fuzzy_lsh_strategy_matches_broadcast(spark):
+def _best_match(probe: str, keys: list[str]) -> str:
+    """Reference best match: highest Jaro-Winkler on trimmed, lowered
+    keys, smallest key on ties."""
+    p = probe.strip().lower()
+    return min(
+        keys, key=lambda k: (-jaro_winkler_similarity(p, k.strip().lower()), k)
+    )
+
+
+def test_fuzzy_lsh_strategy_matches_broadcast(spark, monkeypatch):
     """The LSH big-lookup path must find the same best matches as the
     exact broadcast path when probes are near their targets (typo'd
     circuit names share most char 3-grams)."""
@@ -74,125 +88,66 @@ def test_fuzzy_lsh_strategy_matches_broadcast(spark):
     probe = spark.createDataFrame(
         [(i, n.lower()[:-1]) for i, n in enumerate(names)], ["pid", "name"]
     )
-    exact = {
-        r["pid"]: r["circuit"]
-        for r in similarity_join(
-            probe, lookup, "name", "circuit", how="inner"
-        ).collect()
-    }
-    approx = {
-        r["pid"]: r["circuit"]
-        for r in similarity_join(
-            probe, lookup, "name", "circuit", how="inner", strategy="lsh"
-        ).collect()
-    }
-    assert approx == exact
+
+    def matches() -> dict:
+        out = similarity_join(probe, lookup, "name", "circuit", how="inner")
+        return {r["pid"]: r["circuit"] for r in out.collect()}
+
+    exact = matches()
+    monkeypatch.setattr(fuzzy, "AUTO_EXHAUSTIVE_MAX", 0)
+    assert matches() == exact == dict(enumerate(names))
 
 
-def test_fuzzy_lsh_left_keeps_unmatched(spark):
+def test_fuzzy_lsh_left_keeps_unmatched(spark, monkeypatch):
+    monkeypatch.setattr(fuzzy, "AUTO_EXHAUSTIVE_MAX", 0)
     probe = spark.createDataFrame([(1, "zzzzqqqq")], ["pid", "name"])
     lookup = spark.createDataFrame([("Mugello",)], ["circuit"])
     out = similarity_join(
-        probe, lookup, "name", "circuit", threshold=0.9, how="left",
-        strategy="lsh",
+        probe, lookup, "name", "circuit", threshold=0.9, how="left"
     ).collect()
     assert len(out) == 1 and out[0]["circuit"] is None
 
 
-def test_fuzzy_blockers_prune_but_keep_best(spark):
-    probe = spark.createDataFrame([(1, "mugelo")], ["pid", "name"])
-    lookup = spark.createDataFrame(
-        [("Mugello",), ("Misano",), ("Qatar",)], ["circuit"]
-    )
-    full = similarity_join(probe, lookup, "name", "circuit", how="inner")
-    blocked = similarity_join(
-        probe, lookup, "name", "circuit", how="inner", blocker="first_char"
-    )
-    assert (
-        full.select("circuit").collect() == blocked.select("circuit").collect()
-    )
-
-
-def test_fuzzy_auto_blocker_switches_on_lookup_size(spark):
-    """blocker='auto' (the default) must stay exhaustive for a
-    dimension-sized lookup and switch to the recall-safe LSH strategy
-    past AUTO_EXHAUSTIVE_MAX (r5 judge ask #4: never first_char, whose
-    pruning silently flips a best match on a leading typo) — the auto
-    result must equal the forced-exhaustive result on BOTH sides of
-    the boundary."""
-    from pyspark.sql import functions as F
-
-    from lsdm_motogp_data_integration_spark.operators.fuzzy import (
-        AUTO_EXHAUSTIVE_MAX,
-    )
-
-    big_lookup = spark.range(AUTO_EXHAUSTIVE_MAX + 200).select(
-        F.concat(F.lit("name_"), F.col("id").cast("string")).alias("cand")
-    )
-    small_lookup = big_lookup.limit(AUTO_EXHAUSTIVE_MAX - 1)
-    probe = spark.createDataFrame(
-        [(1, "name_77x"), (2, "name_123")], ["pid", "name"]
-    )
-    for lookup in (small_lookup, big_lookup):
-        auto = similarity_join(probe, lookup, "name", "cand", how="inner")
-        exhaustive = similarity_join(
-            probe, lookup, "name", "cand", how="inner", blocker="none"
-        )
-        assert sorted(
-            (r["pid"], r["cand"]) for r in auto.collect()
-        ) == sorted((r["pid"], r["cand"]) for r in exhaustive.collect())
-
-
-def test_fuzzy_lookup_size_hint_skips_count_and_matches(spark):
-    """The lookup_size hint must (a) produce the same result as the
-    auto-counted path and (b) actually skip the sizing count — asserted
-    by handing the hint a lookup whose .count() would raise (an RDD
-    barrier is overkill; a hint on an unresolvable-size view suffices:
-    we monkeypatch count to raise)."""
-    from lsdm_motogp_data_integration_spark.operators.fuzzy import (
-        AUTO_EXHAUSTIVE_MAX,
-    )
-
-    probe = spark.createDataFrame([(1, "yamaha"), (2, "ducatti")], ["pid", "name"])
+def test_fuzzy_lsh_keeps_leading_typo_match(spark, monkeypatch):
+    """The LSH path keeps the best match for a first-char-corrupted
+    probe ('iamaha' and 'yamaha' share most 3-grams), where
+    first-character blocking would lose it."""
+    probe = spark.createDataFrame([(1, "iamaha")], ["pid", "name"])
     lookup = spark.createDataFrame(
         [("yamaha",), ("ducati",), ("honda",)], ["cand"]
     )
-    base = similarity_join(probe, lookup, "name", "cand", how="inner")
-    hinted = similarity_join(
-        probe, lookup, "name", "cand", how="inner", lookup_size=3
-    )
-    assert sorted(map(tuple, base.collect())) == sorted(
-        map(tuple, hinted.collect())
-    )
 
-    # the hint must short-circuit the eager count job entirely
-    def boom():
-        raise AssertionError("lookup.count() ran despite lookup_size hint")
+    def matched() -> list:
+        out = similarity_join(
+            probe, lookup, "name", "cand", how="inner", threshold=0.7
+        )
+        return [r["cand"] for r in out.collect()]
 
-    lookup.count = boom  # type: ignore[method-assign]
-    hinted2 = similarity_join(
-        probe, lookup, "name", "cand", how="inner", lookup_size=3
-    )
-    assert sorted(map(tuple, hinted2.collect())) == sorted(
-        map(tuple, base.collect())
-    )
+    assert matched() == ["yamaha"]
+    monkeypatch.setattr(fuzzy, "AUTO_EXHAUSTIVE_MAX", 0)
+    assert matched() == ["yamaha"]
 
-    del lookup.count  # restore the real count() for the no-hint call
 
-    # a hint past the boundary flips auto to the LSH strategy — which,
-    # unlike the retired first_char fallback, KEEPS the best match for
-    # a first-char-corrupted probe (iamaha/yamaha share most 3-grams):
-    # the leading-typo case that motivated the r5 judge's ask #4
-    probe_bad = spark.createDataFrame([(1, "iamaha")], ["pid", "name"])
-    exhaustive = similarity_join(
-        probe_bad, lookup, "name", "cand", how="inner", threshold=0.7
-    )
-    lsh_auto = similarity_join(
-        probe_bad, lookup, "name", "cand", how="inner", threshold=0.7,
-        lookup_size=AUTO_EXHAUSTIVE_MAX + 1,
-    )
-    assert [r["cand"] for r in exhaustive.collect()] == ["yamaha"]
-    assert [r["cand"] for r in lsh_auto.collect()] == ["yamaha"]
+def test_fuzzy_auto_blocker_switches_on_lookup_size(spark):
+    """Up to AUTO_EXHAUSTIVE_MAX lookup rows every pair is scored
+    against a broadcast lookup; one row more switches to LSH
+    candidates. Both sides of the boundary must return the exhaustive
+    best match, computed here from the pure-Python reference."""
+    probes = {1: "name_77x", 2: "name_123", 3: " NAME_999 "}
+    probe = spark.createDataFrame(list(probes.items()), ["pid", "name"])
+    for n, exhaustive in (
+        (fuzzy.AUTO_EXHAUSTIVE_MAX, True),
+        (fuzzy.AUTO_EXHAUSTIVE_MAX + 1, False),
+    ):
+        keys = [f"name_{i}" for i in range(n)]
+        lookup = spark.createDataFrame([(k,) for k in keys], ["cand"])
+        out = similarity_join(probe, lookup, "name", "cand", how="inner")
+        plan = formatted_plan(out)
+        assert ("BroadcastNestedLoopJoin" in plan) == exhaustive, n
+        got = {r["pid"]: r["cand"] for r in out.collect()}
+        assert got == {
+            pid: _best_match(name, keys) for pid, name in probes.items()
+        }, n
 
 
 def test_fuzzy_duplicate_lookup_keys_deterministic(spark):

@@ -41,16 +41,6 @@ def test_dim_joins_broadcast(spark, sf_dir):
     assert_broadcast_join(entry.q11_standings(spark, sf_dir))
 
 
-def test_conditional_agg_fewer_exchanges_than_multiway(spark, sf_dir):
-    """The collapsed q10 must shuffle strictly less than the literal
-    5-way-join q09 — the documented reason it exists (SURVEY §2.4)."""
-    literal = count_exchanges(entry.q09_position_counts_multiway(spark, sf_dir))
-    collapsed = count_exchanges(
-        entry.q10_position_counts_conditional(spark, sf_dir)
-    )
-    assert collapsed < literal, (collapsed, literal)
-
-
 def test_fuzzy_join_broadcasts_lookup(spark, sf_dir):
     df = entry.q17_fuzzy_best_match(spark, sf_dir)
     assert_broadcast_join(df)

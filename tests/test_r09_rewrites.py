@@ -249,3 +249,32 @@ def test_lloyd_local_rounds_bitidentical_to_distributed(spark):
     dist = _train_centroids(df, "embedding", "vec_id", 5, 3, 0)
     assert local.shape == dist.shape
     assert (local == dist).all(), np.abs(local - dist).max()
+
+
+def test_lloyd_local_sum_exact_for_wide_values(spark):
+    """Spark sums decimal(28,12) into an exact decimal(38,12); the
+    driver-local round must not round that sum at 28 digits. With one
+    cell every row is a member, and the position-0 sum
+    9007199254740992 + 9007199254740994 + 1e-12 needs 29 digits: at 28
+    it loses the 1e-12, the double conversion rounds half-even down
+    and the mean reads 6004799503160661 instead of 6004799503160663."""
+    import numpy as np
+
+    from lsdm_motogp_data_integration_spark.operators.ann import (
+        _normalize_rows,
+        _train_centroids,
+    )
+
+    df = spark.createDataFrame(
+        [
+            Row(vec_id=i, embedding=[x, 1.0])
+            for i, x in enumerate(
+                [9007199254740992.0, 9007199254740994.0, 1e-12]
+            )
+        ]
+    )
+    local = _train_centroids(df, "embedding", "vec_id", 1, 1, 3)
+    dist = _train_centroids(df, "embedding", "vec_id", 1, 1, 0)
+    exact = _normalize_rows(np.array([[6004799503160663.0, 1.0]]))
+    assert (dist == exact).all(), dist
+    assert (local == dist).all(), (local, dist)

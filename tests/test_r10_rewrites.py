@@ -213,63 +213,6 @@ class TestQ19SharedSignatures:
             )
 
 
-class TestContainmentPrefilter:
-    """containment_pairs' bloom containing-side prefilter is EXACT:
-    bloom path == off path, candidates and verified pairs."""
-
-    @pytest.fixture(scope="class")
-    def corpus(self, spark):
-        base = "alpha bravo charlie delta echo foxtrot golf hotel india"
-        rows = [
-            (1, base),
-            (2, base + " juliet kilo lima mike november oscar papa"),
-            (3, "zulu yankee xray whiskey victor uniform tango sierra"),
-            (4, base + " extra words beyond the contained prefix here"),
-            (5, "totally unrelated content that matches nothing else"),
-            (6, base),  # exact copy: mutual containment
-        ]
-        return spark.createDataFrame(rows, "doc_id bigint, text string")
-
-    @pytest.mark.parametrize("cand_only", [True, False])
-    def test_bloom_equals_off(self, spark, corpus, cand_only):
-        from lsdm_motogp_data_integration_spark.operators.dedup import (
-            containment_pairs,
-        )
-
-        kw = dict(k=3, threshold=0.6, candidates_only=cand_only)
-        off = containment_pairs(
-            corpus, "text", "doc_id", containing_prefilter="off", **kw
-        )
-        bloom = containment_pairs(
-            corpus, "text", "doc_id", containing_prefilter="bloom", **kw
-        )
-        cols = (
-            ["id_a", "id_b"]
-            if cand_only
-            else ["id_a", "id_b", "containment"]
-        )
-        assert _rows(bloom, cols) == _rows(off, cols)
-        assert _rows(off, cols)  # non-trivial
-
-    def test_conf_default_is_off_and_invalid_raises(self, spark, corpus):
-        from lsdm_motogp_data_integration_spark.operators.dedup import (
-            containment_pairs,
-        )
-
-        # default (None) resolves from the session conf; unset == off
-        d = containment_pairs(corpus, "text", "doc_id", k=3)
-        o = containment_pairs(
-            corpus, "text", "doc_id", k=3, containing_prefilter="off"
-        )
-        cols = ["id_a", "id_b", "containment"]
-        assert _rows(d, cols) == _rows(o, cols)
-        with pytest.raises(ValueError, match="bloom|off"):
-            containment_pairs(
-                corpus, "text", "doc_id", k=3,
-                containing_prefilter="semi",
-            ).collect()
-
-
 class TestBoilerplateSizeGuard:
     """remove_boilerplate_lines' broadcast cap: fail-loud assert on
     the broadcast path, count-then-choose on 'auto' (VERDICT r9 #7)."""

@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from lsdm_motogp_data_integration_spark.functions.similarity import (
     jaro_similarity,
@@ -59,63 +58,3 @@ def test_udf(spark):
     rows = df.select(jaro_winkler_udf("a", "b").alias("s")).collect()
     assert rows[0]["s"] == pytest.approx(0.9611111111111111, abs=1e-12)
     assert rows[1]["s"] is None
-
-
-def test_jvm_column_matches_python_reference(spark):
-    """jaro_winkler_col (pure Column expression, no Python in the plan)
-    must agree with the pure-Python reference — including empty-window
-    edge cases (Spark's sequence() runs descending when lo > hi) and
-    strings past any bitmask-friendly length."""
-    import random
-
-    from lsdm_motogp_data_integration_spark.functions.similarity import (
-        jaro_winkler_col,
-    )
-
-    random.seed(7)
-    pairs = []
-    for alph, n, maxlen in [("abcde", 300, 12), ("abcdefghijklmnop", 150, 30)]:
-        for _ in range(n):
-            a = "".join(random.choice(alph) for _ in range(random.randint(0, maxlen)))
-            b = "".join(random.choice(alph) for _ in range(random.randint(0, maxlen)))
-            pairs.append((a, b))
-    pairs += [
-        ("martha", "marhta"),
-        ("dixon", "dicksonx"),
-        ("deda", "ba"),          # empty-window regression pair
-        ("", "x"),
-        ("", ""),
-        ("same", "same"),
-        ("ARGENTINA", "argentin"),  # case-insensitive like FuzzyMatch
-    ]
-    df = spark.createDataFrame(pairs, ["a", "b"])
-    got = df.select(
-        "a", "b", jaro_winkler_col(F.col("a"), F.col("b")).alias("jw")
-    ).collect()
-    for r in got:
-        expected = jaro_winkler_similarity(r["a"].lower(), r["b"].lower())
-        assert r["jw"] == pytest.approx(expected, abs=1e-12), (r["a"], r["b"])
-
-
-def test_jvm_column_null_inputs(spark):
-    from lsdm_motogp_data_integration_spark.functions.similarity import (
-        jaro_winkler_col,
-    )
-
-    df = spark.createDataFrame(
-        [("abc", None), (None, None)], "a string, b string"
-    )
-    rows = df.select(jaro_winkler_col("a", "b").alias("s")).collect()
-    assert rows[0]["s"] is None and rows[1]["s"] is None
-
-
-def test_jvm_column_rejects_long_strings(spark):
-    """Past the 63-char bitmask width the Column scorer raises instead
-    of scoring approximately (long corpora belong on the pandas UDF)."""
-    from lsdm_motogp_data_integration_spark.functions.similarity import (
-        jaro_winkler_col,
-    )
-
-    df = spark.createDataFrame([("x" * 70, "x" * 69 + "y")], ["a", "b"])
-    with pytest.raises(Exception, match="63 chars"):
-        df.select(jaro_winkler_col("a", "b").alias("s")).collect()

@@ -1,14 +1,14 @@
 """Generate REGISTRY.md: every driver-window query, its suite scopes,
 and its docstring headline. Usage: python tools/registry_doc.py > REGISTRY.md"""
 
-import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entry  # noqa: E402
+from bench import _scope_values  # noqa: E402
 
 q = entry.queries()
-o = entry.oracle_sql()
 tags = getattr(entry, "_SUITE_TAG_COLS", {})
 
 print(f"# REGISTRY — the {len(q)} driver-window queries\n")
@@ -22,24 +22,5 @@ for i, (name, fn) in enumerate(q.items(), 1):
     head = doc[0].rstrip() if doc else ""
     head = head.replace("|", "\\|")
     tag = tags.get(name, "")
-    scopes = ""
-    if tag:
-        sql = o[name]
-        found = set(
-            re.findall(
-                r"SELECT\s+(?:DISTINCT\s+)?'([^']+)'\s+AS\s+" + tag, sql
-            )
-        )
-        # UNION branches that lead with the bare literal (no AS — the
-        # column name is inherited from the first branch); anchored to
-        # UNION ALL so scalar literals inside subqueries don't match
-        found |= set(
-            re.findall(
-                r"UNION ALL\s*(?:--[^\n]*\n\s*)*SELECT\s+'(\w+)'\s*,(?!\s*')",
-                sql,
-            )
-        )
-        scopes = ", ".join(
-            sorted(x for x in found if not x.startswith("__"))
-        )
+    scopes = ", ".join(_scope_values(name, tag)) if tag else ""
     print(f"| {i} | `{name}` | {tag} | {scopes} | {head} |")
