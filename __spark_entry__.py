@@ -562,8 +562,8 @@ def q19_neardup_pairs_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``exact``: PPJoin-prefix-filtered exact n-gram-Jaccard join — the
       verification path, run standalone.
     - ``incremental``: the growing-corpus path
-      (dedup.build_minhash_index → incremental_neardup →
-      exact_jaccard_for_pairs): the base documents are indexed once,
+      (dedup.build_minhash_index → incremental_neardup → the suite's
+      shared exact verification): the base documents are indexed once,
       the near-dup variants arrive as a NEW batch and are checked with
       one bucket-keyed join against the index (est-Jaccard ≥ 0.4
       candidate screen, wide enough that the exact ≥ 0.8 verdict

@@ -26,7 +26,7 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -325,8 +325,8 @@ def shingle_sets(
 ) -> DataFrame:
     """Prepared sorted ``k``-gram shingle-set relation
     ``(id_col, shingles array<bigint> sorted)`` — the shared input
-    contract of :func:`jaccard_pairs`, :func:`minhash_lsh_pairs`, and
-    :func:`exact_jaccard_for_pairs` (their ``sets_df`` parameter).
+    contract of :func:`jaccard_pairs` and :func:`minhash_lsh_pairs`
+    (their ``sets_df`` parameter).
     Build ONCE, persist, and pass to every consumer: the per-row
     shingle HOF pass is the dominant map-side cost of the whole
     near-dup family, and a suite that runs several methods over the
@@ -359,7 +359,6 @@ def jaccard_pairs(
     persist_sets: bool = False,
     sets_df: DataFrame | None = None,
     candidates_only: bool = False,
-    _persist_handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """All pairs (a < b) with word-k-gram Jaccard >= threshold — EXACT
     (no LSH recall loss), with positional prefix filtering.
@@ -404,8 +403,6 @@ def jaccard_pairs(
         )
         if persist_sets:
             sets_df = sets_df.persist()
-            if _persist_handles is not None:
-                _persist_handles.append(sets_df)
     # ceil over FLOAT t*size overcounts when the product lands an ulp
     # above an integer (0.8*5 = 4.0000000000000002 -> ceil 5, true 4),
     # silently shrinking the prefix and DROPPING true pairs from this
@@ -532,69 +529,6 @@ def containment_pairs(
         .filter(F.col("containment") >= threshold)
         .select(
             "id_a", "id_b", F.round("containment", 6).alias("containment")
-        )
-    )
-
-
-def exact_jaccard_for_pairs(
-    pairs: DataFrame,
-    corpus: DataFrame,
-    text_col: str,
-    id_col: str,
-    left_col: str,
-    right_col: str,
-    *,
-    k: int = 5,
-    threshold: float = 0.8,
-    sets_df: DataFrame | None = None,
-    unit: str = "word",
-) -> DataFrame:
-    """Exact word-k-gram Jaccard for GIVEN candidate pairs only — the
-    verification step of the incremental-dedup contract
-    (:func:`incremental_neardup` hits joined back to stored text), and
-    generally the cheap exactness upgrade for any candidate generator.
-
-    Scale: two id-equi-joins of the pair relation against the shingle
-    sets — O(|pairs|) verification work, never a corpus self-join.
-    Output (id_a = ``left_col`` side, id_b, jaccard) with
-    :func:`jaccard_pairs`' 6-decimal rounding, so results splice into
-    the same oracle relation.
-
-    ``sets_df``: a prepared :func:`shingle_sets` relation; when given
-    ``corpus``/``text_col`` are not re-shingled (suite sharing)."""
-    if sets_df is not None:
-        sets_df = sets_df.select(
-            F.col(id_col).alias("__id"), F.col("shingles").alias("__set")
-        )
-    else:
-        grams = (
-            word_shingle_hashes(text_col, k)
-            if unit == "word"
-            else char_shingle_hashes(text_col, k)
-        )
-        sets_df = corpus.select(
-            F.col(id_col).alias("__id"), grams.alias("__set")
-        )
-    sa = sets_df.select(
-        F.col("__id").alias(left_col), F.col("__set").alias("__sa")
-    )
-    sb = sets_df.select(
-        F.col("__id").alias(right_col), F.col("__set").alias("__sb")
-    )
-    return (
-        pairs.select(left_col, right_col)
-        .join(sa, left_col)
-        .join(sb, right_col)
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("__sa", "__sb"))
-            / F.size(F.array_union("__sa", "__sb")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select(
-            F.col(left_col).alias("id_a"),
-            F.col(right_col).alias("id_b"),
-            F.round("jaccard", 6).alias("jaccard"),
         )
     )
 
@@ -755,7 +689,6 @@ def minhash_lsh_pairs(
     sets_df: DataFrame | None = None,
     candidates_only: bool = False,
     mins_df: DataFrame | None = None,
-    _persist_handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact verification.
 
@@ -797,10 +730,7 @@ def minhash_lsh_pairs(
     read from it (MinHash minima over the distinct shingle set equal
     the minima over raw grams — MinHash is duplicate-insensitive), so
     the input plan is evaluated exactly once. The caller owns the
-    persisted lifetime (unpersist after consuming the result); a
-    composing caller can pass ``_persist_handles`` to receive the
-    persisted relation and release it once the result is materialized
-    (see :func:`dedup_corpus`)."""
+    persisted lifetime (unpersist after consuming the result)."""
     if num_perm % bands:
         raise ValueError("num_perm must divide evenly into bands")
     rows_per_band = num_perm // bands
@@ -839,8 +769,6 @@ def minhash_lsh_pairs(
             "__id",
             word_shingle_hashes(text_col, k).alias("__set"),
         ).persist()
-        if _persist_handles is not None:
-            _persist_handles.append(sets_df)
         # one input evaluation total: signatures from the persisted set
         # via the SAME helper as everywhere else — an inline
         # re-implementation here once dropped the empty/null sentinel
@@ -1065,7 +993,6 @@ def simhash_pairs(
     weighting: str = "none",
     persist_sketch: bool = False,
     entropy_guard: str = "warn",
-    _persist_handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash: candidates share at least one
     of ``max_hamming + 1`` signature chunks (pigeonhole: a pair within
@@ -1156,8 +1083,6 @@ def simhash_pairs(
         )
     if persist_sketch:
         hashed = hashed.persist()
-        if _persist_handles is not None:
-            _persist_handles.append(hashed)
     return hamming64_pairs(
         hashed,
         "__id",
@@ -1639,89 +1564,6 @@ def _hamming64_pairs_collapsed(
     return within.unionByName(across)
 
 
-def hamming64_join(
-    probe: DataFrame,
-    index: DataFrame,
-    id_col: str,
-    sig_col: str,
-    *,
-    max_hamming: int = 3,
-    sig_bits: int = 64,
-    ref_id_col: str | None = None,
-    ref_sig_col: str | None = None,
-) -> DataFrame:
-    """Two-relation variant of :func:`hamming64_pairs` — the
-    incremental/streaming screen: every (probe, index) pair within
-    ``max_hamming`` bits, via the same pigeonhole chunk buckets (a
-    probe meets an index row iff they agree on ≥1 of ``max_hamming+1``
-    disjoint chunks — COMPLETE for the radius, bucketed, never
-    |probe|×|index|). The perceptual analogue of
-    ``incremental_neardup``'s MinHash band screen: the index side is 8
-    bytes per historical item, so screening a new batch against an
-    arbitrarily long history shuffles only chunk buckets.
-
-    ``ref_id_col``/``ref_sig_col`` default to the probe-side names.
-    ``sig_bits`` (r8) declares narrow signatures, same contract as
-    :func:`hamming64_pairs`; r8 also moved this join onto the same
-    BALANCED chunk bounds (the old ceil-width split left a rump
-    chunk whose higher collision rate dominated candidates ~4×).
-    Output: (new_id, ref_id, hamming)."""
-    if not (1 <= int(sig_bits) <= 64):
-        raise ValueError(f"sig_bits must be 1..64, got {sig_bits}")
-    if not (0 <= int(max_hamming) <= sig_bits - 1):
-        raise ValueError(
-            f"max_hamming must be 0..{sig_bits - 1} for "
-            f"sig_bits={sig_bits}, got {max_hamming}"
-        )
-    bounds = _hamming_chunk_bounds(max_hamming, sig_bits)
-
-    def chunked(df: DataFrame, idc: str, sgc: str) -> DataFrame:
-        return df.select(
-            F.col(idc).alias("__id"), F.col(sgc).alias("__sh")
-        ).select(
-            "__id",
-            "__sh",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("c"),
-                            F.shiftrightunsigned(
-                                F.col("__sh"), bounds[i]
-                            )
-                            .bitwiseAND(
-                                F.lit(
-                                    _chunk_mask(
-                                        bounds[i + 1] - bounds[i]
-                                    )
-                                )
-                            )
-                            .alias("v"),
-                        )
-                        for i in range(len(bounds) - 1)
-                    ]
-                )
-            ).alias("__chunk"),
-        )
-
-    a = chunked(probe, id_col, sig_col).alias("a")
-    b = chunked(
-        index, ref_id_col or id_col, ref_sig_col or sig_col
-    ).alias("b")
-    return (
-        a.join(b, on=F.col("a.__chunk") == F.col("b.__chunk"))
-        .select(
-            F.col("a.__id").alias("new_id"),
-            F.col("b.__id").alias("ref_id"),
-            F.bit_count(F.col("a.__sh").bitwiseXOR(F.col("b.__sh")))
-            .cast("bigint")
-            .alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["new_id", "ref_id"])
-    )
-
-
 # ---------------------------------------------------------------------------
 # embedding cosine near-dup
 # ---------------------------------------------------------------------------
@@ -1939,120 +1781,6 @@ def semdedup(
 
 
 # ---------------------------------------------------------------------------
-# end-to-end corpus deduplication
-# ---------------------------------------------------------------------------
-
-
-def dedup_corpus(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    threshold: float = 0.8,
-    persist_sets: bool = True,
-    keep_by: Column | None = None,
-    k: int = 5,
-    unit: str = "word",
-) -> DataFrame:
-    """The whole near-dup removal pipeline as one call: MinHash-LSH
-    candidate pairs (exact-Jaccard verified at ``threshold``) → closed
-    into clusters via pointer-jumping connected components → keep ONE
-    representative per cluster. Returns the surviving rows of ``df``
-    with their original columns — what a training-data pipeline
-    actually feeds downstream.
-
-    Survivor policy: by default the smallest id (deterministic). Pass
-    ``keep_by`` (a Column evaluated against ``df``'s rows, e.g. a
-    quality score) to keep the HIGHEST-scoring member instead — the
-    "keep best, not first" policy real curation pipelines want when a
-    cluster mixes a clean original with mangled mirrors; ties fall
-    back to smallest id so the choice stays deterministic.
-
-    Every stage is the scale path: banded candidate generation (no
-    all-pairs), O(log d) label rounds, and a final broadcast-size
-    semi-join of representatives when clusters are few, else a plain
-    shuffled semi-join.
-
-    Persist lifetime: with ``persist_sets=True`` the pair relation is
-    eagerly localCheckpoint-ed (it is O(near-dup pairs) — small — and
-    the iterative component phase re-reads it anyway), after which the
-    shingle-set cache is released — no storage outlives the call.
-
-    Exact duplicates are collapsed FIRST (md5-digest window, the same
-    survivor policy): a group of m byte-identical documents — routine
-    at corpus scale (empty strings, boilerplate mirrors) — would
-    otherwise collide in every band and materialize O(m²) verified
-    pairs before clustering ever sees them. Only the per-digest
-    survivor enters the near-dup stage; the final semi-join returns
-    one representative per combined exact+near-dup cluster.
-
-    ``unit="char"`` (+ ``k``, default 8 is sensible there) switches the
-    shingle basis to character k-grams for unsegmented scripts (see
-    :func:`char_shingle_hashes` — the word basis degenerates to exact
-    matching on CJK). The incremental/streaming index family takes the
-    same ``unit`` — but a MIXED pairing (char batch vs word-basis
-    index or vice versa) silently never matches (signatures are basis-
-    positional): keep one basis per index lineage."""
-    order = (
-        [keep_by.desc(), F.col(id_col).asc()]
-        if keep_by is not None
-        else [F.col(id_col).asc()]
-    )
-    dw = Window.partitionBy(F.md5(F.col(text_col))).orderBy(*order)
-    pruned = (
-        df.withColumn("__xrk", F.row_number().over(dw))
-        .filter(F.col("__xrk") == 1)
-        .drop("__xrk")
-    )
-    handles: list[DataFrame] = []
-    if unit == "word" and k == 5:
-        # the default path is untouched (plan-pin stability)
-        pairs = minhash_lsh_pairs(
-            pruned, text_col, id_col,
-            threshold=threshold, persist_sets=persist_sets,
-            _persist_handles=handles,
-        )
-    else:
-        sets = shingle_sets(pruned, text_col, id_col, k=k, unit=unit)
-        if persist_sets:
-            sets = sets.persist()
-            handles.append(sets)
-        pairs = minhash_lsh_pairs(
-            pruned, text_col, id_col,
-            k=k, threshold=threshold, sets_df=sets,
-        )
-    if handles:
-        pairs = pairs.localCheckpoint(eager=True)
-        for h in handles:
-            h.unpersist()
-    components = connected_components(
-        pruned.select(F.col(id_col)), pairs, node_col=id_col
-    )
-    if keep_by is None:
-        reps = (
-            components.groupBy("component")
-            .agg(F.min(F.col(id_col)).alias(id_col))
-            .select(id_col)
-        )
-    else:
-        # rank within the component: highest score, ties -> smallest
-        # id. A window (one shuffle on the component key) instead of a
-        # max(struct(score, -id)) trick, which silently null-casts
-        # non-numeric id types.
-        scored = pruned.select(F.col(id_col), keep_by.alias("__keep_score"))
-        w = Window.partitionBy("component").orderBy(
-            F.col("__keep_score").desc(), F.col(id_col).asc()
-        )
-        reps = (
-            components.join(scored, on=id_col)
-            .withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") == 1)
-            .select(id_col)
-        )
-    return df.join(reps, on=id_col, how="left_semi")
-
-
-# ---------------------------------------------------------------------------
 # incremental corpus maintenance (dedup new batches against a saved index)
 # ---------------------------------------------------------------------------
 
@@ -2214,53 +1942,3 @@ def incremental_neardup(
             "est_jaccard",
         )
     )
-
-
-def containment_dedup(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    k: int = 5,
-    threshold: float = 0.9,
-    sets_df: DataFrame | None = None,
-) -> DataFrame:
-    """The ACTION on top of :func:`containment_pairs`: drop every
-    document (nearly) contained in another, keep the containing
-    supersets — the crawl-corpus cleanup for quote expansions and
-    boilerplate-wrapped reposts, where symmetric near-dup keeps both
-    (their Jaccard is low) and plain dedup keeps both (texts differ).
-
-    The drop rule is LOCAL and deterministic: drop ``a`` iff some
-    ``b`` exists with ``C(a→b) = |S_a ∩ S_b| / |S_a| >= threshold``
-    and either the containment is one-directional (``C(b→a) < t`` —
-    a true subset dies, its superset lives) or it is mutual with
-    ``b < a`` (exact copies and mutual near-copies keep the smallest
-    id, matching :func:`exact_dedup`'s min-id policy). Verified by
-    test on strict subsets, exact-copy groups, and unrelated docs.
-
-    Returns the surviving rows of ``df``. One anti-join against the
-    (narrow) drop set; candidate generation is the prefix-filtered
-    equi-join of :func:`containment_pairs`."""
-    pairs = containment_pairs(
-        df, text_col, id_col, k=k, threshold=threshold, sets_df=sets_df
-    )
-    back = pairs.select(
-        F.col("id_a").alias("id_b"),
-        F.col("id_b").alias("id_a"),
-        F.col("containment").alias("__c_back"),
-    )
-    # a pair (a contained-in b): drop a unless the containment is
-    # MUTUAL and a has the smaller id (then b is the one dropped by
-    # its own row). LEFT join: absent reverse row = not mutual.
-    drops = (
-        pairs.join(back, ["id_a", "id_b"], "left")
-        .filter(
-            F.col("__c_back").isNull()
-            | (F.col("__c_back") < F.lit(threshold))
-            | (F.col("id_b") < F.col("id_a"))
-        )
-        .select(F.col("id_a").alias(id_col))
-        .distinct()
-    )
-    return df.join(drops, id_col, "left_anti")

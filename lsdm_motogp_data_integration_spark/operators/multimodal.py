@@ -1496,8 +1496,7 @@ def pdf_text(
     pure-Python ISO 32000 walker): (media_id, n_pages, n_objects,
     pdf_version, text), pages joined by ``page_sep``.  The biggest
     real-world LLM-corpus document format becomes a first-class
-    curation SOURCE: feed the output's ``text`` straight into
-    ``pipelines.curation.curate``.
+    text SOURCE: the output's ``text`` feeds any text operator.
 
     ``strict=True`` propagates per-blob errors (incl. the honest
     gates: encrypted documents, image-only filters); ``strict=False``

@@ -18,8 +18,6 @@ round-6 determinism recipe, oracle-unrollable like the Lloyd trainer.
 
 from __future__ import annotations
 
-from typing import NamedTuple
-
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from lsdm_motogp_data_integration_spark.operators.textops import (
@@ -717,13 +715,9 @@ def _nb_model_from_counts(
     counts: DataFrame, label_docs: DataFrame, n_buckets: int
 ) -> DataFrame:
     """Derive the NB model relation from COUNT relations — the
-    single-sourced finishing math shared by :func:`train_lang_nb`
-    (counts from one corpus pass) and
-    :func:`streaming.lang_model_from_partials` (counts summed over
-    per-batch partials): because NB sufficient statistics are plain
-    counts, batch and streaming training land on the SAME model
-    bit-for-bit iff their counts agree — sharing this function makes
-    that equivalence structural, not coincidental.
+    finishing math of :func:`train_lang_nb` (counts from one corpus
+    pass). NB sufficient statistics are plain counts, so any two count
+    relations that agree give the SAME model bit for bit.
 
     ``counts``: (label, bucket, cnt) gram-occurrence counts;
     ``label_docs``: (label, nl) per-label document counts."""
@@ -762,34 +756,6 @@ def _nb_model_from_counts(
         ).alias("logp"),
     )
     return logp.unionByName(priors)
-
-
-def _resolve_lang_model(model, n_buckets, char_n, portable):
-    """Normalize a scorer's model argument. A :class:`LangNBModel`
-    supplies its OWN training params — the scorer's param kwargs are
-    ``None`` sentinels, so "explicitly passed" is unambiguous and any
-    explicit value that disagrees with the model raises (the mismatch
-    is never silent). A DataFrame or collected rows pass through with
-    the caller's params (unset -> the training defaults 64/3/False).
-    Returns ``(rows_or_df, n_buckets, char_n, portable)``."""
-    if isinstance(model, LangNBModel):
-        for name, given, trained in (
-            ("n_buckets", n_buckets, model.n_buckets),
-            ("char_n", char_n, model.char_n),
-            ("portable", portable, model.portable),
-        ):
-            if given is not None and given != trained:
-                raise ValueError(
-                    f"{name}={given} conflicts with the loaded model's "
-                    f"{name}={trained} (params travel WITH the model)"
-                )
-        return model.rows, model.n_buckets, model.char_n, model.portable
-    return (
-        model,
-        64 if n_buckets is None else n_buckets,
-        3 if char_n is None else char_n,
-        False if portable is None else portable,
-    )
 
 
 def _validate_lang_model_grid(model, n_buckets: int) -> None:
@@ -859,36 +825,15 @@ def _validate_lang_model_grid(model, n_buckets: int) -> None:
         )
 
 
-def lang_model_digest(rows) -> str:
-    """Deterministic content digest of a lang_nb model: sha256 over the
-    sorted canonical ``label\\tbucket\\tlogp`` lines (logp is already
-    6dp-quantized by training, so the 6dp text form is exact). The
-    model analogue of :func:`ann.codebook_digest` — recorded by
-    :func:`save_lang_model`, re-derived by :func:`load_lang_model`, so
-    a truncated or hand-edited model parquet raises at load instead of
-    scoring garbage (VERDICT r5 next-round #7)."""
-    import hashlib
-
-    canon = sorted(
-        (r["label"], int(r["bucket"]), float(r["logp"])) for r in rows
-    )
-    h = hashlib.sha256()
-    for label, bucket, logp in canon:
-        if logp == 0:
-            logp = 0.0  # never emit "-0.000000"
-        h.update(f"{label}\t{bucket}\t{logp:.6f}\n".encode())
-    return h.hexdigest()
-
-
 def classify_lang_nb(
     df: DataFrame,
     model,
     id_col: str = "doc_id",
     text_col: str = "text",
     *,
-    n_buckets: int | None = None,
-    char_n: int | None = None,
-    portable: bool | None = None,
+    n_buckets: int = 64,
+    char_n: int = 3,
+    portable: bool = False,
     pred_col: str = "lang_nb",
 ) -> DataFrame:
     """Classify with a :func:`train_lang_nb` model: per document,
@@ -907,14 +852,11 @@ def classify_lang_nb(
 
     Returns (``id_col``, ``pred_col``, ``nb_score`` — the winning
     6dp log-posterior)."""
-    model, n_buckets, char_n, portable = _resolve_lang_model(
-        model, n_buckets, char_n, portable
-    )
     # same fail-loud misuse guards as lang_nb_verdict (ADVICE r5):
     # empty model and train/serve grid mismatch raise here too
     _validate_lang_model_grid(model, n_buckets)
     if not isinstance(model, DataFrame):
-        # collected rows (e.g. a LangNBModel): lift back to a relation
+        # collected rows: lift back to a relation
         # for the broadcast join — tiny, n_labels × (n_buckets + 1)
         model = df.sparkSession.createDataFrame(
             [(r["label"], r["bucket"], r["logp"]) for r in model],
@@ -974,9 +916,9 @@ def lang_nb_verdict(
     col: Column | str,
     model,
     *,
-    n_buckets: int | None = None,
-    char_n: int | None = None,
-    portable: bool | None = None,
+    n_buckets: int = 64,
+    char_n: int = 3,
+    portable: bool = False,
 ) -> Column:
     """:func:`classify_lang_nb` as a PURE COLUMN expression — the
     model-as-plan-literal form (the ``_pq_book_literals`` pattern):
@@ -984,11 +926,9 @@ def lang_nb_verdict(
     plan, the per-doc score is one ``aggregate`` over the gram-bucket
     array (``element_at`` lookups, all whole-stage codegen), and the
     verdict is the argmax struct sort used engine-wide. No explode, no
-    join, NO SHUFFLE — which is what lets the curation screens route
-    on a TRAINED model in batch and streaming alike
-    (``_apply_screens`` stays a stateless per-row stage; a
-    join/groupBy classifier would turn the stream's screen into a
-    streaming aggregation).
+    join, NO SHUFFLE — so a per-row screen can route on a TRAINED
+    model in batch and streaming alike (a join/groupBy classifier
+    would turn a stream's screen into a streaming aggregation).
 
     ``model`` is a :func:`train_lang_nb` DataFrame or its collected
     rows; collecting it is O(n_labels × n_buckets) — metadata-sized,
@@ -997,14 +937,7 @@ def lang_nb_verdict(
     shuffle-quantized order of :func:`classify_lang_nb`, so low-order
     float bits can differ between the two forms; VERDICTS agree except
     at exact sub-1e-6 score ties (argmax parity pinned by test on
-    real corpora). Gram-less docs score priors only — same fallback.
-
-    Also accepts a :class:`LangNBModel` (from :func:`load_lang_model`)
-    — the params then travel with the model and conflicting explicit
-    kwargs raise."""
-    model, n_buckets, char_n, portable = _resolve_lang_model(
-        model, n_buckets, char_n, portable
-    )
+    real corpora). Gram-less docs score priors only — same fallback."""
     if isinstance(model, DataFrame):
         model = model.collect()
     # shared fail-loud guards: empty model and train/serve grid
@@ -1074,130 +1007,3 @@ def lang_nb_verdict(
         .otherwise(0),
     ).getItem(0)
     return best["code"]
-
-
-class LangNBModel(NamedTuple):
-    """A loaded :func:`train_lang_nb` model WITH its training params —
-    the unit :func:`load_lang_model` returns and every scorer accepts.
-    Carrying (``n_buckets``, ``char_n``, ``portable``) alongside the
-    rows closes the same silently-wrong gap the ANN ``_meta`` sidecar
-    closes for codebooks: scoring with the wrong ``char_n`` or hash
-    family would produce confidently wrong verdicts with no error —
-    bundling the params makes the mismatch unrepresentable."""
-
-    rows: list
-    n_buckets: int
-    char_n: int
-    portable: bool
-
-
-def save_lang_model(
-    model,
-    spark,
-    path: str,
-    *,
-    n_buckets: int | None = None,
-    char_n: int | None = None,
-    portable: bool | None = None,
-) -> None:
-    """Persist a :func:`train_lang_nb` model: the (label, bucket,
-    logp) rows as a tiny parquet plus the ANN-style ``_meta`` sidecar
-    (kind + the training params + a content digest) — train ONCE per
-    corpus, serve many, and a tree served with mismatched params is
-    detectable instead of silently wrong (the ``save_codebook``
-    discipline; VERDICT r4 #7's pattern applied to the language
-    model).
-
-    ``n_buckets`` is DERIVED from the model rows (max bucket + 1,
-    validated as a complete grid) — an explicit value that disagrees
-    with the rows raises instead of recording wrong provenance
-    (ADVICE r5: the old 64-default sidecar would assert wrong params
-    for a 128-bucket model saved without re-passing them). ``char_n``
-    and ``portable`` are NOT derivable from the rows: pass them
-    explicitly, or pass a :class:`LangNBModel` so every param travels
-    with the model; a bare-DataFrame save without them records the
-    training defaults (3 / False).
-
-    The sidecar also records :func:`lang_model_digest` of the rows,
-    verified by :func:`load_lang_model` — a truncated or hand-edited
-    model parquet raises at load rather than scoring garbage."""
-    from lsdm_motogp_data_integration_spark.operators.ann import (
-        _write_index_meta,
-    )
-
-    if isinstance(model, LangNBModel):
-        rows, n_buckets, char_n, portable = _resolve_lang_model(
-            model, n_buckets, char_n, portable
-        )
-    else:
-        rows = model.collect() if isinstance(model, DataFrame) else model
-        char_n = 3 if char_n is None else char_n
-        portable = False if portable is None else portable
-    if not rows:
-        raise ValueError(
-            "empty lang_nb model (no labels) — nothing to save"
-        )
-    derived = max(int(r["bucket"]) for r in rows) + 1
-    if n_buckets is not None and int(n_buckets) != derived:
-        raise ValueError(
-            f"n_buckets={n_buckets} disagrees with the model rows "
-            f"(bucket grid implies {derived}) — refusing to record "
-            f"wrong provenance"
-        )
-    n_buckets = derived
-    _validate_lang_model_grid(rows, n_buckets)
-    spark.createDataFrame(
-        [(r["label"], r["bucket"], r["logp"]) for r in rows],
-        "label string, bucket bigint, logp double",
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-    _write_index_meta(
-        spark,
-        path,
-        {
-            "kind": "lang_nb",
-            "n_buckets": int(n_buckets),
-            "char_n": int(char_n),
-            "portable": bool(portable),
-            "model_digest": lang_model_digest(rows),
-        },
-    )
-
-
-def load_lang_model(spark, path: str) -> LangNBModel:
-    """Load :func:`save_lang_model` output as a :class:`LangNBModel`
-    (rows + recovered params). A tree without the sidecar, or whose
-    sidecar is not a ``lang_nb`` model, raises — there is no safe
-    default for the hash params. When the sidecar carries a
-    ``model_digest`` (every save since r6 does), the loaded rows'
-    digest must match and the grid must be complete — corruption,
-    truncation, or hand-edits raise here instead of serving
-    confidently wrong verdicts downstream."""
-    from lsdm_motogp_data_integration_spark.operators.ann import (
-        _read_index_meta,
-    )
-
-    meta = _read_index_meta(spark, path)
-    if meta is None or meta.get("kind") != "lang_nb":
-        raise ValueError(
-            f"no lang_nb _meta sidecar at {path} — cannot recover the "
-            f"training params (n_buckets/char_n/portable); rebuild with "
-            f"save_lang_model"
-        )
-    rows = spark.read.parquet(path).collect()
-    n_buckets = int(meta["n_buckets"])
-    _validate_lang_model_grid(rows, n_buckets)
-    want = meta.get("model_digest")
-    if want is not None:
-        got = lang_model_digest(rows)
-        if got != want:
-            raise ValueError(
-                f"lang_nb model at {path} fails its digest check "
-                f"(sidecar {want}, rows {got}) — the parquet was "
-                f"modified after save_lang_model; rebuild the model"
-            )
-    return LangNBModel(
-        rows=rows,
-        n_buckets=n_buckets,
-        char_n=int(meta["char_n"]),
-        portable=bool(meta["portable"]),
-    )

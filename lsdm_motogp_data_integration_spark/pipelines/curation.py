@@ -1,658 +1,15 @@
-"""End-to-end training-data curation pipeline.
+"""Corpus card: one report over a text corpus and a media corpus.
 
-Composes the operator families into the canonical pre-training data
-flow — the pipeline a user of this engine actually runs over a raw
-document corpus:
-
-    language filter → quality floor → repetition screen → PII redaction
-    → exact dedup → near-dup dedup (MinHash-LSH + components)
-    → decontamination vs a held-out set → chunking → sequence packing
-    → deterministic train/val split
-
-Every stage is one of the tested operators; the composition stays a
-single lazy plan per output (Catalyst sees the whole thing — filters
-push into the scan, one shuffle per keyed stage). Nothing here
-collects to the driver.
-
-Scale notes: stages are ordered cheapest-first so each shuffle sees
-less data (column-expression screens before the dedup shuffles; the
-near-dup pass before the gram-explosion of decontamination); at
-100 TB the same order holds because selectivity, not constant cost,
-dominates.
+``dataset_card`` (q53) composes the per-source and per-language text
+rollups with ``pipelines.media.media_dataset_card`` (q41) onto one
+schema. It computes no new statistics, so the oracles of those two
+queries cover every number it reports.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from lsdm_motogp_data_integration_spark.operators.dedup import (
-    dedup_corpus,
-)
-from lsdm_motogp_data_integration_spark.operators.membership import (
-    ngram_decontaminate,
-)
-from lsdm_motogp_data_integration_spark.operators.textops import (
-    gopher_flags,
-    lang_id2,
-    pack_sequences,
-    quality_score,
-    redact_pii,
-    stratified_sample,
-    strip_html,
-    token_count,
-)
-
-
-def _lang_verdict(
-    text_col: str, lang_model, lang_model_params: dict | None
-) -> Column:
-    """The language-screen verdict shared by :func:`_apply_screens`
-    and :func:`screen_report`: the trained NB plan-literal Column when
-    a model is given (:func:`scoring.lang_nb_verdict`), else the fixed
-    per-script tables (:func:`textops.lang_id2`). Either way a pure
-    per-row expression — valid on batch and streaming plans alike."""
-    if lang_model is not None:
-        from lsdm_motogp_data_integration_spark.operators.scoring import (
-            lang_nb_verdict,
-        )
-
-        return lang_nb_verdict(
-            text_col, lang_model, **(lang_model_params or {})
-        )
-    return lang_id2(text_col)
-
-
-def _apply_screens(
-    docs: DataFrame,
-    *,
-    text_col: str,
-    keep_langs: tuple[str, ...],
-    min_quality: float,
-    min_distinct_ratio: float,
-    gopher_rules: bool,
-    badwords: tuple[str, ...],
-    keep_scripts: tuple[str, ...] | None = None,
-    lang_model=None,
-    lang_model_params: dict | None = None,
-) -> DataFrame:
-    """The stateless screen stage shared VERBATIM by :func:`curate`
-    (batch) and :func:`curate_stream` (streaming): language filter →
-    quality floor → repetition screen → optional Gopher rules →
-    optional badword screen → PII redaction. All pure Column
-    expressions over one row at a time, so the same code path is valid
-    on a batch AND a streaming DataFrame — sharing it is what makes
-    the batch/stream equivalence test a tautology for this stage.
-
-    ``keep_scripts`` (r4) prepends the route-by-script screen
-    (``textops.script_id`` — per-Unicode-block char counts): it runs
-    FIRST because it is the cheapest reliable multilingual split.
-
-    The language screen routes on :func:`textops.lang_id2` (r5): the
-    per-script discriminator, so ``keep_langs=("zh",)`` keeps Chinese
-    and drops Japanese/Korean inside a CJK corpus — with the r4
-    marker-only ``lang_id``, every non-Latin doc was 'und' and the
-    only way to curate CJK was the blunt ``keep_langs=("und",)``.
-    Latin verdicts are unchanged (same marker tables).
-
-    ``lang_model`` (r5) upgrades the language screen to a TRAINED
-    verdict: a :func:`scoring.train_lang_nb` model (DataFrame or
-    collected rows) evaluated via :func:`scoring.lang_nb_verdict` —
-    the model-as-plan-literal Column form, so the screen STAYS a
-    stateless per-row expression and the same code path remains valid
-    on a stream (an explode/join classifier would turn this into a
-    streaming aggregation). ``lang_model_params`` must carry the
-    training ``n_buckets``/``char_n``/``portable`` when they differ
-    from the defaults."""
-    if keep_scripts is not None:
-        from lsdm_motogp_data_integration_spark.operators.textops import (
-            script_id,
-        )
-
-        docs = docs.filter(script_id(text_col).isin(*keep_scripts))
-    text = F.col(text_col)
-    words = F.split(
-        F.lower(F.regexp_replace(F.trim(text), r"\s+", " ")), " "
-    )
-    # repetition screen: degenerate docs repeat a tiny vocabulary
-    distinct_ratio_ok = (
-        F.size(F.array_distinct(words)) / F.size(words)
-    ) >= min_distinct_ratio
-
-    screened = (
-        docs.filter(
-            _lang_verdict(text_col, lang_model, lang_model_params).isin(
-                *keep_langs
-            )
-        )
-        .filter(quality_score(text_col) >= min_quality)
-        .filter(distinct_ratio_ok)
-    )
-    if gopher_rules:
-        # the Column-expression subset of the Gopher rule set (Rae et
-        # al. 2021; textops.gopher_flags) — word-count bounds, mean
-        # word length, symbol ratio, alpha-word fraction. The
-        # aggregate-shaped repetition rules (top-token / top-bigram
-        # share) are served by the distinct_ratio screen above; the
-        # full verdict incl. those lives in q22's gopher_keep.
-        gf = gopher_flags(text_col)
-        nt = token_count(text_col)
-        screened = screened.filter(
-            (nt >= 50)
-            & (nt <= 100000)
-            & (gf["mean_word_len"] >= 3.0)
-            & (gf["mean_word_len"] <= 10.0)
-            & (gf["symbol_word_ratio"] <= 0.1)
-            & (gf["frac_alpha_words"] >= 0.8)
-        )
-    if badwords:
-        # C4 content blocklist: ANY whole-word hit drops the page
-        # (textops.badword_screen) — pure Column regex, same scan
-        from lsdm_motogp_data_integration_spark.operators.textops import (
-            badword_screen,
-        )
-
-        screened = screened.filter(
-            badword_screen(text_col, badwords)["badword_keep"]
-        )
-    return screened.withColumn(text_col, redact_pii(text_col))
-
-
-def curate(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    html: bool = False,
-    url_col: str | None = None,
-    url_blocklist: DataFrame | None = None,
-    keep_langs: tuple[str, ...] = ("en",),
-    keep_scripts: tuple[str, ...] | None = None,
-    lang_model=None,
-    lang_model_params: dict | None = None,
-    min_quality: float = 0.3,
-    min_distinct_ratio: float = 0.2,
-    gopher_rules: bool = False,
-    badwords: tuple[str, ...] = (),
-    line_dedup: bool = False,
-    neardup_threshold: float = 0.8,
-    shingle_unit: str = "word",
-    shingle_k: int = 5,
-    holdout: DataFrame | None = None,
-    decontam_gram: int = 8,
-    decontam_method: str = "exact",
-    pack_budget: int = 2048,
-    val_fraction: float = 0.05,
-    split_group_col: str | None = None,
-) -> dict[str, DataFrame]:
-    """Run the full curation flow; returns the intermediate and final
-    tables (all lazy):
-
-    - ``screened``  — language/quality/repetition-filtered, PII-redacted
-    - ``deduped``   — one representative per exact + near-dup cluster
-    - ``clean``     — after decontamination against ``holdout`` (if
-      given; a training doc sharing ANY word ``decontam_gram``-gram
-      with the holdout is dropped — the conservative screen)
-    - ``packed``    — per-source sequence assignments (seq_id/offset)
-    - ``train`` / ``val`` — deterministic hash split of ``packed``
-
-    ``html=True`` prepends the C4-style extraction stage
-    (``textops.strip_html``): pass raw page markup in ``text_col``
-    and every downstream screen operates on the extracted visible
-    text — the crawl-to-corpus entry point. Per-row Column work; adds
-    no shuffle and fuses into the screen stage's scan.
-
-    ``split_group_col`` switches the train/val split to a
-    LEAKAGE-SAFE group split: the verdict hashes the group key (e.g.
-    a domain column) instead of the document id, so documents sharing
-    a group always land on the same side — the standard guard against
-    near-duplicate train/val contamination.
-
-    ``url_col`` + ``url_blocklist`` (a ``pattern`` relation of blocked
-    zones) prepend the crawl blocklist screen
-    (``urls.filter_blocked_urls``): documents whose source host equals
-    or sits under a blocked zone are dropped BEFORE any text work —
-    the cheapest screen runs first (broadcast host match, no shuffle
-    on the document side).
-    """
-    if url_blocklist is not None:
-        if url_col is None:
-            raise ValueError("url_blocklist requires url_col")
-        from lsdm_motogp_data_integration_spark.operators.urls import (
-            filter_blocked_urls,
-        )
-
-        docs = filter_blocked_urls(docs, url_col, url_blocklist)
-    if html:
-        docs = docs.withColumn(text_col, strip_html(text_col))
-
-    screened = _apply_screens(
-        docs,
-        text_col=text_col,
-        keep_langs=keep_langs,
-        keep_scripts=keep_scripts,
-        lang_model=lang_model,
-        lang_model_params=lang_model_params,
-        min_quality=min_quality,
-        min_distinct_ratio=min_distinct_ratio,
-        gopher_rules=gopher_rules,
-        badwords=badwords,
-    )
-
-    if line_dedup:
-        # RefinedWeb/MassiveText exact-line rule BEFORE document-level
-        # dedup: repeated lines survive only at their globally-first
-        # occurrence, so boilerplate-heavy mirrors stop matching each
-        # other (and the near-dup stage sees the distinctive residue).
-        from lsdm_motogp_data_integration_spark.operators.boilerplate import (
-            dedup_lines_keep_first,
-        )
-
-        cleaned = dedup_lines_keep_first(
-            screened, id_col=id_col, text_col=text_col
-        ).select(id_col, F.col(text_col).alias("__ld_text"))
-        screened = (
-            screened.drop(text_col)
-            .join(cleaned, id_col)
-            .withColumnRenamed("__ld_text", text_col)
-        )
-
-    # exact dedup as a single window pass (survivor = min id per
-    # content digest) rather than exact_dedup + semi-join back: the
-    # semi-join's probe side and the digest aggregation would each
-    # evaluate the `screened` subtree — language/quality screens plus
-    # the regex-heavy PII redaction — over the full corpus
-    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(
-        F.col(id_col).asc()
-    )
-    after_exact = (
-        screened.withColumn("__dup_rk", F.row_number().over(w))
-        .filter(F.col("__dup_rk") == 1)
-        .drop("__dup_rk")
-    )
-    # shingle_unit="char" (+ shingle_k≈8) is the unsegmented-script
-    # basis (CJK etc. — route with textops.script_id); word shingles
-    # there degenerate to exact matching (dedup.char_shingle_hashes)
-    deduped = dedup_corpus(
-        after_exact, text_col, id_col, threshold=neardup_threshold,
-        k=shingle_k, unit=shingle_unit,
-    )
-
-    if holdout is not None:
-        # membership.ngram_decontaminate: "exact" keeps this function
-        # fully lazy (the documented contract); "bloom" is the 100 TB
-        # screen (few-MB bit filter instead of the full gram set) at
-        # the cost of two eager filter-metadata jobs at plan build
-        contaminated = ngram_decontaminate(
-            deduped,
-            holdout,
-            text_col,
-            id_col,
-            n=decontam_gram,
-            method=decontam_method,
-        ).select(id_col)
-        clean = deduped.join(contaminated, id_col, "left_anti")
-    else:
-        clean = deduped
-
-    with_tokens = clean.withColumn("n_tokens", token_count(text_col))
-    packed = pack_sequences(
-        with_tokens,
-        "n_tokens",
-        [id_col],
-        budget=pack_budget,
-        partition_by=["source"] if "source" in clean.columns else None,
-    )
-
-    if split_group_col is not None:
-        # LEAKAGE-SAFE split: the val/train verdict is a function of
-        # the GROUP key (e.g. the source domain), so near-duplicate or
-        # related documents sharing a group can never straddle the
-        # split — per-document hash splits leak test-adjacent text
-        # into train whenever dedup wasn't perfect. Pure Column
-        # threshold on md5(group): no join, no shuffle, deterministic
-        # across runs/engines/layouts.
-        gkey = F.coalesce(
-            F.col(split_group_col).cast("string"), F.lit("__null__")
-        )
-        bucket = F.conv(
-            F.substring(F.md5(F.concat(F.lit("split|"), gkey)), 1, 8),
-            16,
-            10,
-        ).cast("bigint") % F.lit(1_000_000)
-        is_val = bucket < F.lit(int(round(val_fraction * 1_000_000)))
-        val = packed.filter(is_val)
-        train = packed.filter(~is_val)
-    else:
-        val = stratified_sample(
-            packed,
-            "source" if "source" in packed.columns else id_col,
-            {},
-            id_col,
-            default_fraction=val_fraction,
-        )
-        train = packed.join(
-            val.select(id_col), id_col, "left_anti"
-        )
-    return {
-        "screened": screened,
-        "deduped": deduped,
-        "clean": clean,
-        "packed": packed,
-        "train": train,
-        "val": val,
-    }
-
-
-def curate_stream(
-    doc_stream: DataFrame,
-    *,
-    accepted_dir: str,
-    index_dir: str,
-    checkpoint_dir: str,
-    shards_dir: str | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    html: bool = False,
-    keep_langs: tuple[str, ...] = ("en",),
-    keep_scripts: tuple[str, ...] | None = None,
-    lang_model=None,
-    lang_model_params: dict | None = None,
-    min_quality: float = 0.3,
-    min_distinct_ratio: float = 0.2,
-    gopher_rules: bool = False,
-    badwords: tuple[str, ...] = (),
-    neardup_threshold: float = 0.8,
-    shingle_unit: str = "word",
-    k: int = 5,
-    num_perm: int = 32,
-    bands: int = 16,
-    est_threshold: float = 0.4,
-    n_shards: int = 8,
-    holdout: DataFrame | None = None,
-    decontam_gram: int = 8,
-    decontam_method: str = "bloom",
-    strict_decontam: bool = False,
-) -> None:
-    """Streaming curation — the continuous-ingest composition of the
-    same stages :func:`curate` runs in batch (judge r4 ask #6):
-
-        screens (language → quality → repetition → optional Gopher /
-        badwords → PII redaction)  →  exact + near-dup dedup against
-        everything accepted so far  →  per-batch shard append
-
-    The screen stage IS :func:`_apply_screens` — byte-for-byte the
-    batch code path, applied to the streaming DataFrame (every screen
-    is a stateless Column expression, so it composes with a streaming
-    plan unchanged). Dedup + persistence reuse
-    ``streaming.streaming_neardup_ingest``: per micro-batch, survivors
-    of a within-batch ``dedup_corpus`` pass are screened against the
-    persisted MinHash band index of all prior accepted docs (exact
-    duplicates are caught by the same screen — identical text yields
-    an identical signature, so every band matches and the exact verify
-    scores 1.0), then appended as ``accepted_dir/batch_id=N`` +
-    ``index_dir/batch_id=N`` (+ ``shards_dir/batch_id=N/shard=K`` when
-    ``shards_dir`` is given), each an idempotent per-batch overwrite —
-    exactly-once under replay without a transactional store.
-
-    Batch/stream equivalence (pinned by test): on the same documents,
-    the union of accepted batches equals batch ``curate``'s
-    ``deduped`` set whenever (a) cross-batch near-dup clusters are
-    cliques at the threshold (chain-shaped clusters can differ: batch
-    mode sees the whole component at once, streaming only pairs
-    against previously ACCEPTED docs — same caveat as
-    ``incremental_neardup``) and (b) ids ascend with arrival order (so
-    first-accepted == min-id representative). Shard assignment is the
-    deterministic ``md5(salt|id)`` hash, hence identical to the batch
-    exporter's regardless of batching.
-
-    ``holdout`` enables STREAMING DECONTAMINATION: the holdout's
-    distinct word ``decontam_gram``-gram relation (and, for
-    ``decontam_method="bloom"``, its few-MB Bloom filter) is built
-    ONCE before the stream starts — the static-holdout codebook
-    pattern — and each batch's dedup survivors that share ANY gram
-    with it are dropped before the writes (the same conservative
-    drop-any-overlap rule as batch ``curate(holdout=...)``; the
-    verdict is per-document and static, so batch/stream equivalence
-    holds — pinned by test — with ONE deliberate divergence: a
-    contaminated doc is dropped BEFORE it enters the index, so a later
-    clean near-dup of it is admitted by the stream, while batch mode
-    loses both (there the contaminated doc wins dedup first and then
-    falls to decontamination, taking its shadowed near-dups with it).
-    The streaming behavior retains content that itself shares nothing
-    with the holdout — strictly less lossy, documented rather than
-    replicated). Per batch the added cost is one gram explode over the
-    batch + the Bloom-prescreened verify join; the holdout side is
-    never rescanned.
-
-    ``strict_decontam=True`` (r5, VERDICT r4 next-round #8) closes
-    that divergence for callers that need bit-equal batch/stream
-    corpora: contaminated docs are MARKED (boolean ``excluded``
-    column) instead of dropped — they still enter the MinHash index
-    and the accepted history (so they shadow their later clean
-    near-dups and their text remains available for exact
-    verification, exactly like the batch dedup-then-decontaminate
-    order), but are left out of the shard export. The accepted corpus
-    is then ``accepted_dir`` filtered to ``NOT excluded``, and that
-    set equals batch ``curate(holdout=...)``'s ``clean`` membership
-    (pinned by test on the divergence fixture).
-
-    Batch-only stages stay batch-only by design: ``line_dedup`` (keyed
-    global state) and sequence packing (needs the final corpus) run
-    downstream of ``accepted_dir``.
-
-    Drains available input (availableNow inside the ingest) and
-    returns."""
-    from lsdm_motogp_data_integration_spark.operators.membership import (
-        build_bloom,
-        screen_bloom,
-        word_gram_relation,
-    )
-    from lsdm_motogp_data_integration_spark.streaming import (
-        streaming_neardup_ingest,
-    )
-
-    post_filter = None
-    post_mark = None
-    if strict_decontam and holdout is None:
-        raise ValueError("strict_decontam requires a holdout")
-    if holdout is not None:
-        if decontam_method not in ("bloom", "exact"):
-            raise ValueError(
-                f"decontam_method must be bloom|exact, got "
-                f"{decontam_method!r}"
-            )
-        # build-once state (the stream's decontamination "codebook"):
-        # the distinct holdout gram relation, localCheckpoint-ed so
-        # per-batch probes never re-run the holdout explode, + the
-        # Bloom bits for the no-shuffle prescreen
-        eval_grams = (
-            word_gram_relation(holdout, text_col, None, decontam_gram)
-            .dropDuplicates()
-            .localCheckpoint(eager=True)
-        )
-        spec = (
-            build_bloom(eval_grams, "gram")
-            if decontam_method == "bloom"
-            else None
-        )
-
-        def _contaminated_ids(survivors: DataFrame) -> DataFrame:
-            grams = word_gram_relation(
-                survivors, text_col, id_col, decontam_gram
-            )
-            if spec is not None:
-                grams = screen_bloom(grams, spec, "gram")
-            return (
-                grams.join(F.broadcast(eval_grams), "gram")
-                .select(id_col)
-                .dropDuplicates()
-            )
-
-        if strict_decontam:
-            # mark-don't-drop: contaminated docs keep shadowing their
-            # near-dups via the index but never reach the shard export
-            def post_mark(survivors: DataFrame) -> DataFrame:
-                hits = _contaminated_ids(survivors).withColumn(
-                    "excluded", F.lit(True)
-                )
-                return survivors.join(hits, id_col, "left").withColumn(
-                    "excluded", F.coalesce(F.col("excluded"), F.lit(False))
-                )
-
-        else:
-
-            def post_filter(survivors: DataFrame) -> DataFrame:
-                return survivors.join(
-                    _contaminated_ids(survivors), id_col, "left_anti"
-                )
-
-    if html:
-        doc_stream = doc_stream.withColumn(text_col, strip_html(text_col))
-    screened = _apply_screens(
-        doc_stream,
-        text_col=text_col,
-        keep_langs=keep_langs,
-        keep_scripts=keep_scripts,
-        lang_model=lang_model,
-        lang_model_params=lang_model_params,
-        min_quality=min_quality,
-        min_distinct_ratio=min_distinct_ratio,
-        gopher_rules=gopher_rules,
-        badwords=badwords,
-    )
-    streaming_neardup_ingest(
-        screened,
-        index_dir=index_dir,
-        accepted_dir=accepted_dir,
-        checkpoint_dir=checkpoint_dir,
-        text_col=text_col,
-        id_col=id_col,
-        k=k,
-        num_perm=num_perm,
-        bands=bands,
-        threshold=neardup_threshold,
-        est_threshold=est_threshold,
-        shards_dir=shards_dir,
-        n_shards=n_shards,
-        post_filter=post_filter,
-        post_mark=post_mark,
-        unit=shingle_unit,
-    )
-
-
-def screen_report(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    keep_langs: tuple[str, ...] = ("en",),
-    lang_model=None,
-    lang_model_params: dict | None = None,
-    min_quality: float = 0.3,
-    min_distinct_ratio: float = 0.2,
-    gopher_rules: bool = False,
-    badwords: tuple[str, ...] = (),
-) -> tuple[DataFrame, DataFrame]:
-    """Screening observability — the drop-funnel every production
-    curation run reports: per-document KEEP FLAGS for each screen
-    (computed as columns in ONE scan — no per-stage re-filtering) and
-    the aggregated funnel. Returns ``(flagged, funnel)``:
-
-    - ``flagged``: the input plus one boolean per screen
-      (``lang_ok``, ``quality_ok``, ``ratio_ok``, optional
-      ``gopher_ok`` / ``badword_ok``) and ``keep`` (their AND —
-      matches :func:`curate`'s ``screened`` membership for the same
-      parameters, pinned by test);
-    - ``funnel``: one row per screen with ``n_fail`` (docs that fail
-      THIS screen regardless of others — failure reasons overlap, so
-      these don't sum to total drops) and ``n_survive_cumulative``
-      (docs passing this screen AND all screens listed before it —
-      the classic funnel read), in screen order.
-
-    One aggregation over the flag columns; at 100 TB the report costs
-    one scan, not one scan per screen."""
-    from lsdm_motogp_data_integration_spark.operators.textops import (
-        badword_screen,
-    )
-
-    text = F.col(text_col)
-    words = F.split(
-        F.lower(F.regexp_replace(F.trim(text), r"\s+", " ")), " "
-    )
-    flags: list[tuple[str, Column]] = [
-        ("lang_ok", _lang_verdict(
-            text_col, lang_model, lang_model_params
-        ).isin(*keep_langs)),
-        ("quality_ok", quality_score(text_col) >= min_quality),
-        (
-            "ratio_ok",
-            (F.size(F.array_distinct(words)) / F.size(words))
-            >= min_distinct_ratio,
-        ),
-    ]
-    if gopher_rules:
-        gf = gopher_flags(text_col)
-        nt = token_count(text_col)
-        flags.append(
-            (
-                "gopher_ok",
-                (nt >= 50)
-                & (nt <= 100000)
-                & (gf["mean_word_len"] >= 3.0)
-                & (gf["mean_word_len"] <= 10.0)
-                & (gf["symbol_word_ratio"] <= 0.1)
-                & (gf["frac_alpha_words"] >= 0.8),
-            )
-        )
-    if badwords:
-        flags.append(
-            ("badword_ok", badword_screen(text_col, badwords)["badword_keep"])
-        )
-    flagged = docs
-    for name, c in flags:
-        flagged = flagged.withColumn(name, c)
-    keep = flags[0][1]
-    for _, c in flags[1:]:
-        keep = keep & c
-    flagged = flagged.withColumn("keep", keep)
-
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    cum = None
-    for name, _ in flags:
-        aggs.append(
-            F.sum(F.when(~F.col(name), 1).otherwise(0)).alias(
-                f"__fail_{name}"
-            )
-        )
-        cum = F.col(name) if cum is None else (cum & F.col(name))
-        aggs.append(
-            F.sum(F.when(cum, 1).otherwise(0)).alias(f"__cum_{name}")
-        )
-    one = flagged.agg(*aggs)
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(i + 1).cast("bigint").alias("stage"),
-                F.lit(name).alias("screen"),
-                F.col(f"__fail_{name}").cast("bigint").alias("n_fail"),
-                F.col(f"__cum_{name}")
-                .cast("bigint")
-                .alias("n_survive_cumulative"),
-            )
-            for i, (name, _) in enumerate(flags)
-        ]
-    )
-    funnel = one.select(
-        F.col("__n").cast("bigint").alias("n_total"),
-        F.explode(rows).alias("r"),
-    ).select(
-        "n_total",
-        F.col("r.stage").alias("stage"),
-        F.col("r.screen").alias("screen"),
-        F.col("r.n_fail").alias("n_fail"),
-        F.col("r.n_survive_cumulative").alias("n_survive_cumulative"),
-    )
-    return flagged, funnel
 
 
 def dataset_card(
@@ -678,10 +35,10 @@ def dataset_card(
 
     with ``unit``-suffixed size stats (``chars`` for text rows,
     ``bytes`` for media rows): n_items, n_kept (media: survivors of
-    the same header screens ``curate_media`` applies, via
-    ``media_screen_kwargs``; text: n_items — run :func:`curate` for
-    the text funnel), sum/mean/min/max_units (decimal-exact mean),
-    and the media-only dims/duration spread (NULL on text rows).
+    the ``media.media_screen_flags`` header screens, via
+    ``media_screen_kwargs``; text: n_items), sum/mean/min/max_units
+    (decimal-exact mean), and the media-only dims/duration spread
+    (NULL on text rows).
 
     Cost shape: the text side is two groupBys on metadata-sized keys
     over columns the corpus scan already reads; the media side is the

@@ -1,21 +1,14 @@
-"""Media curation pipeline (r6) — the multimodal counterpart to
-:mod:`pipelines.curation`: compose this engine's media operators into
-the flow a multimodal training corpus actually runs:
+"""Media corpus screens, funnel and dataset card (q41).
 
-    header screens (format / dims / duration / size — NO decode)
-    → exact content dedup (decoded canonical digest, container-
-      independent)
-    → perceptual near-dup dedup per modality (image dHash / audio
-      envelope hash / video conjunctive frame hashes)
-
-Stage order is cheapest-first, the text pipeline's design stance
-carried over: the screen pass is O(header bytes) per blob and runs
-INSIDE the same Arrow batch as the blobs (``_container_info_one``
-alongside the content — blobs are never joined against a metadata
-relation, so the screen stage has NO shuffle at all); only survivors
-pay for decode; the dedup stages shuffle 8–64 bytes per blob
-(digests/hashes), never the blobs themselves — the one blob-moving
-step is the final keep-set semi-join, once, at the end.
+``media_screen_flags`` is one Arrow pass over the blobs that reads
+container headers only (format / dims / duration / size, NO decode)
+and emits one boolean per screen next to the metadata. The screen
+pass runs INSIDE the same Arrow batch as the blobs
+(``_container_info_one`` alongside the content), so blobs are never
+joined against a metadata relation and the screens need NO shuffle.
+``media_screen_report`` (the per-screen funnel) and
+``media_dataset_card`` (per (kind, fmt) statistics) aggregate that
+one flags relation.
 
 Reference parity note: the reference ETL has no media handling; this
 serves the brief's multimodal/training-pipeline requirement.
@@ -23,7 +16,6 @@ serves the brief's multimodal/training-pipeline requirement.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -34,11 +26,6 @@ from pyspark.sql import types as T
 from lsdm_motogp_data_integration_spark.operators import mediacodec as mc
 from lsdm_motogp_data_integration_spark.operators.multimodal import (
     _container_info_one,
-    _decode_canonical,
-    audio_dhash,
-    image_dhash,
-    video_dhash,
-    video_neardup_pairs,
 )
 
 MEDIA_SCREEN_SCHEMA = T.StructType(
@@ -77,10 +64,10 @@ def media_screen_flags(
     boolean PER SCREEN + the conjunction ``keep`` — computed alongside
     the content so no join ever moves a blob.  Screens that a blob's
     metadata cannot answer (``duration`` for a still image, ``dims``
-    for audio) pass vacuously, the same fail-only-on-evidence rule as
-    the text pipeline's screens.  Unparseable/NULL blobs fail
-    ``parse`` and every later screen passes vacuously — the funnel
-    attributes each drop to exactly one screen tier."""
+    for audio) pass vacuously: a screen fails only on evidence.
+    Unparseable/NULL blobs fail ``parse`` and every later screen
+    passes vacuously — the funnel attributes each drop to exactly one
+    screen tier."""
     fmt_set = frozenset(keep_fmts) if keep_fmts is not None else None
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -151,167 +138,15 @@ def media_screen_flags(
         run, schema=MEDIA_SCREEN_SCHEMA
     )
 
-
-def _decoded_digest_relation(survivors: DataFrame) -> DataFrame:
-    """(media_id, digest) — sha256 of the CANONICAL decoded form
-    (container-independent: the same pixels as BMP and PNG share one
-    digest), the only columns the exact-dedup shuffle ever moves.
-    Metadata-only formats (mp4/mp3 — no sample decode in this
-    environment) fall back to a ``raw:``-prefixed digest of the
-    container bytes: exact-copy dedup, honestly weaker than
-    canonical (a re-muxed twin survives), and the prefix keeps the
-    two digest spaces from ever colliding."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, digests = [], []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                ids.append(mid)
-                blob = bytes(content)
-                try:
-                    _fmt, canon, _info = _decode_canonical(blob)
-                    digests.append(hashlib.sha256(canon).hexdigest())
-                except (NotImplementedError, mc.MediaFormatError):
-                    # r9: MediaFormatError joins the fallback —
-                    # SCREENS already dropped malformed blobs, so a
-                    # surviving blob that still cannot sample-decode
-                    # (an mp4 skeleton's header-only track, a gated
-                    # variant) dedups by raw bytes instead of killing
-                    # the job
-                    digests.append(
-                        "raw:" + hashlib.sha256(blob).hexdigest()
-                    )
-            yield pd.DataFrame({"media_id": ids, "digest": digests})
-
-    return survivors.select("media_id", "content").mapInPandas(
-        run,
-        schema=T.StructType(
-            [
-                T.StructField("media_id", T.LongType()),
-                T.StructField("digest", T.StringType()),
-            ]
-        ),
-    )
-
-
-def _perceptual_drop_ids(
-    survivors: DataFrame, max_hamming: int, video_frames: int
-) -> DataFrame:
-    """ids to DROP under the perceptual policy: within each modality's
-    near-dup pair relation, every id that has a SMALLER near-dup
-    neighbor is dropped (keep-lowest-id — the greedy rule; near-dup is
-    not transitive at a fixed radius, so chains keep their local
-    minima rather than collapsing to one global survivor, documented).
-    Hashing decodes once per blob; the pair joins run on the 8-byte
-    hash relations via the shared pigeonhole band join."""
-    from lsdm_motogp_data_integration_spark.operators.dedup import (
-        hamming64_pairs,
-    )
-
-    # route by DECODABLE fmt — metadata-only blobs (mp4/mp3) have no
-    # pixels/samples to hash and already went through raw-digest dedup
-    img = hamming64_pairs(
-        image_dhash(
-            survivors.filter(
-                F.col("fmt").isin(
-                    "bmp", "pgm", "ppm", "png", "jpeg", "gif", "tiff"
-                )
-            )
-        ).filter(F.col("dhash").isNotNull()),
-        "media_id",
-        "dhash",
-        max_hamming=max_hamming,
-        collapse_identical=True,
-    )
-    aud = hamming64_pairs(
-        audio_dhash(
-            survivors.filter(F.col("fmt") == "wav")
-        ).filter(F.col("adhash").isNotNull()),
-        "media_id",
-        "adhash",
-        max_hamming=max_hamming,
-        collapse_identical=True,
-    )
-    vid = video_neardup_pairs(
-        video_dhash(
-            survivors.filter(F.col("fmt") == "y4m"),
-            n_sample_frames=video_frames,
-        ),
-        n_sample_frames=video_frames,
-        max_hamming=max_hamming,
-    )
-    pairs = (
-        img.select("id_a", "id_b")
-        .unionAll(aud.select("id_a", "id_b"))
-        .unionAll(vid.select("id_a", "id_b"))
-    )
-    # id_a < id_b by the pair contract → b always has a smaller
-    # neighbor
-    return pairs.select(F.col("id_b").alias("media_id")).distinct()
-
-
-def curate_media(
-    media: DataFrame,
-    *,
-    keep_fmts: tuple[str, ...] | None = None,
-    min_width: int | None = None,
-    min_height: int | None = None,
-    min_duration_ms: int | None = None,
-    max_duration_ms: int | None = None,
-    max_bytes: int | None = None,
-    dedup: str | None = "digest",
-    dhash_radius: int = 4,
-    video_frames: int = 2,
-) -> DataFrame:
-    """Curate a media corpus: header screens → (optional) exact
-    decoded-digest dedup → (optional) perceptual near-dup dedup.
-
-    ``dedup``: ``None`` (screens only), ``"digest"`` (exact,
-    container-independent, keep lowest media_id per digest), or
-    ``"perceptual"`` (digest dedup FIRST — exact copies are free to
-    kill on a 64-hex shuffle — then the per-modality perceptual pass
-    at ``dhash_radius``; radius default 4, tighter than q41's demo 6,
-    per the SCALE.md sub-grid entropy rule).  Returns survivors with
-    their screen metadata columns (``content`` included)."""
-    if dedup not in (None, "digest", "perceptual"):
-        raise ValueError(f"unknown dedup policy {dedup!r}")
-    flagged = media_screen_flags(
-        media,
-        keep_fmts=keep_fmts,
-        min_width=min_width,
-        min_height=min_height,
-        min_duration_ms=min_duration_ms,
-        max_duration_ms=max_duration_ms,
-        max_bytes=max_bytes,
-    )
-    survivors = flagged.filter(F.col("keep")).drop(
-        *[f"keep_{s}" for s in _SCREENS], "keep"
-    )
-    if dedup is None:
-        return survivors
-    digests = _decoded_digest_relation(survivors)
-    canonical = digests.groupBy("digest").agg(
-        F.min("media_id").alias("media_id")
-    )
-    keep_ids = canonical.select("media_id")
-    if dedup == "perceptual":
-        kept = survivors.join(keep_ids, "media_id", "left_semi")
-        drop = _perceptual_drop_ids(kept, dhash_radius, video_frames)
-        keep_ids = keep_ids.join(drop, "media_id", "left_anti")
-    # the ONE blob-moving join of the pipeline: survivors ⋉ keep-set
-    return survivors.join(keep_ids, "media_id", "left_semi")
-
-
 def media_screen_report(
     media: DataFrame,
     **screen_kwargs,
 ) -> DataFrame:
-    """The observability face of the screen stage (mirrors
-    ``curation.screen_report``): one row per screen in screen order
-    with ``n_fail`` (blobs failing THIS screen) and ``n_surviving``
-    (blobs passing this and every earlier screen) — computed from the
-    same flags relation ``curate_media`` filters on, so the funnel
-    provably describes the pipeline's own accepted set."""
+    """The observability face of the screen stage: one row per screen
+    in screen order with ``n_fail`` (blobs failing THIS screen) and
+    ``n_surviving`` (blobs passing this and every earlier screen) —
+    computed from the ``media_screen_flags`` relation, so the funnel
+    describes exactly the set its ``keep`` column accepts."""
     flagged = media_screen_flags(media, **screen_kwargs)
     aggs = []
     cum = F.lit(True)
@@ -356,8 +191,8 @@ def media_dataset_card(
     decode, no blob movement), followed by ONE groupBy on (kind, fmt)
     — metadata-sized keys; the card costs a header scan regardless of
     corpus size.  ``screen_kwargs`` (optional) make ``n_kept`` report
-    the card against the same thresholds ``curate_media`` would
-    apply; with none given every parseable blob counts as kept.
+    the card against those screen thresholds; with none given every
+    parseable blob counts as kept.
 
     Columns: kind, fmt, n_blobs, n_kept, sum_bytes, mean_bytes
     (decimal-exact mean, double), min/max_bytes (r8 — the unified
@@ -384,185 +219,3 @@ def media_dataset_card(
         F.sum("duration_ms").alias("sum_duration_ms"),
     )
 
-
-def curate_media_stream(
-    media_stream: DataFrame,
-    *,
-    index_dir: str,
-    checkpoint_dir: str,
-    out_dir: str,
-    dedup: str | None = "digest",
-    dhash_radius: int = 4,
-    keep_fmts: tuple[str, ...] | None = None,
-    min_width: int | None = None,
-    min_height: int | None = None,
-    min_duration_ms: int | None = None,
-    max_duration_ms: int | None = None,
-    max_bytes: int | None = None,
-) -> None:
-    """Continuously-curated media corpus — the streaming form of
-    :func:`curate_media`, in the engine's maintainer-family shape
-    (``streaming_dhash_ingest``): per micro-batch, (1) the SAME
-    zero-shuffle header screens (stateless per-row — valid on a
-    stream by construction), (2) within-batch exact dedup (lowest
-    media_id per canonical decoded digest, ``raw:`` fallback for
-    metadata-only formats), (3) a history screen against the
-    persisted digest index (one equi-join on the 64-hex digest — the
-    only state ever read is (media_id, digest[, dhash]) rows, never
-    blobs), (4) for ``dedup="perceptual"``: within-batch + history
-    image dHash screens via the pigeonhole chunk joins (images only
-    on the stream — the audio/video hash families follow the same
-    pattern and are composed in the BATCH pipeline; a stream of mixed
-    modalities still gets exact dedup for all of them), and (5)
-    accepted index rows land in ``index_dir/batch_id=N`` while the
-    accepted BLOBS land in ``out_dir/batch_id=N`` — the curated
-    corpus itself, written exactly once.
-
-    Exactly-once discipline as the other maintainers: deterministic
-    per-batch directory overwrites, history reads prune to
-    ``batch_id < N``, replay rewrites byte-identical rows.  The
-    ``_meta`` sidecar pins the screen params + dedup policy — a
-    changed policy is a different accepted-set semantics and refuses
-    to resume.  Stream-order caveat (same as the text
-    ``curate_stream``): history wins — a duplicate arriving AFTER its
-    twin is dropped regardless of id order, so stream and batch
-    accepted sets agree when lower ids arrive first."""
-    import json
-
-    from pyspark.errors import AnalysisException
-
-    from lsdm_motogp_data_integration_spark.operators.ann import (
-        _read_index_meta,
-        _write_index_meta,
-    )
-    from lsdm_motogp_data_integration_spark.operators.dedup import (
-        hamming64_join,
-        hamming64_pairs,
-    )
-
-    if dedup not in (None, "digest", "perceptual"):
-        raise ValueError(f"unknown dedup policy {dedup!r}")
-    spark = media_stream.sparkSession
-    screen_kwargs = dict(
-        keep_fmts=keep_fmts,
-        min_width=min_width,
-        min_height=min_height,
-        min_duration_ms=min_duration_ms,
-        max_duration_ms=max_duration_ms,
-        max_bytes=max_bytes,
-    )
-    params = {
-        "kind": "media_curation_index",
-        "dedup": dedup or "none",
-        "dhash_radius": int(dhash_radius),
-        "screens": {
-            k: (list(v) if isinstance(v, tuple) else v)
-            for k, v in screen_kwargs.items()
-            if v is not None
-        },
-    }
-    existing = _read_index_meta(spark, index_dir)
-    if existing is not None and existing != params:
-        raise ValueError(
-            f"media curation index at {index_dir} was built with "
-            f"{json.dumps(existing)}; resuming with "
-            f"{json.dumps(params)} would change the accepted-set "
-            f"semantics mid-stream"
-        )
-    _write_index_meta(spark, index_dir, params)
-
-    def _read_history(batch_id: int):
-        try:
-            return spark.read.parquet(index_dir).filter(
-                F.col("batch_id") < batch_id
-            )
-        except AnalysisException:
-            return None
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        flagged = media_screen_flags(batch_df, **screen_kwargs)
-        surv = flagged.filter(F.col("keep")).drop(
-            *[f"keep_{s}" for s in _SCREENS], "keep"
-        )
-        if dedup is None:
-            surv.sortWithinPartitions("media_id").write.mode(
-                "overwrite"
-            ).parquet(f"{out_dir}/batch_id={batch_id}")
-            return
-        digests = _decoded_digest_relation(surv).localCheckpoint(
-            eager=True
-        )
-        keep = digests.groupBy("digest").agg(
-            F.min("media_id").alias("media_id")
-        )
-        hist = _read_history(batch_id)
-        if hist is not None:
-            keep = keep.join(
-                hist.select("digest"), "digest", "left_anti"
-            )
-        accepted = keep.select("media_id", "digest")
-        if dedup == "perceptual":
-            kept_blobs = surv.join(
-                accepted.select("media_id"), "media_id", "left_semi"
-            )
-            hashes = image_dhash(
-                kept_blobs.filter(
-                    F.col("fmt").isin(
-                        "bmp", "pgm", "ppm", "png", "jpeg", "gif", "tiff"
-                    )
-                )
-            ).filter(F.col("dhash").isNotNull())
-            hashes = hashes.localCheckpoint(eager=True)
-            dups = (
-                hamming64_pairs(
-                    hashes,
-                    "media_id",
-                    "dhash",
-                    max_hamming=dhash_radius,
-                    collapse_identical=True,
-                )
-                .select(F.col("id_b").alias("media_id"))
-                .dropDuplicates()
-            )
-            if hist is not None:
-                hits = (
-                    hamming64_join(
-                        hashes,
-                        hist.filter(
-                            F.col("dhash").isNotNull()
-                        ).select("media_id", "dhash"),
-                        "media_id",
-                        "dhash",
-                        max_hamming=dhash_radius,
-                    )
-                    .select(F.col("new_id").alias("media_id"))
-                    .dropDuplicates()
-                )
-                dups = dups.unionAll(hits).dropDuplicates()
-            accepted = (
-                accepted.join(dups, "media_id", "left_anti")
-                .join(hashes, "media_id", "left")
-                .select("media_id", "digest", "dhash")
-            )
-        else:
-            accepted = accepted.withColumn(
-                "dhash", F.lit(None).cast("long")
-            )
-        accepted = accepted.localCheckpoint(eager=True)
-        accepted.sortWithinPartitions("media_id").write.mode(
-            "overwrite"
-        ).parquet(f"{index_dir}/batch_id={batch_id}")
-        surv.join(
-            accepted.select("media_id"), "media_id", "left_semi"
-        ).sortWithinPartitions("media_id").write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/batch_id={batch_id}")
-
-    q = (
-        media_stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

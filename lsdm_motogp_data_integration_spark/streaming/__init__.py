@@ -1,24 +1,10 @@
-"""Structured Streaming variants of the event pipelines — plus the
-continuous-ingest state maintainers.
+"""Structured Streaming variants of the event pipelines.
 
 The reference is batch-only (SURVEY.md §2.11); per the scale goal the
 same event transformations are exposed as streaming plans: file-source
 stream → watermark → windowed aggregate / stateful sessionization →
 sink. Tests drive these with ``availableNow`` + memory sink so a bounded
 parquet directory exercises the full streaming machinery.
-
-Beyond the event suite, this module maintains the engine's persisted
-state under continuous ingestion, all on the same exactly-once story
-(each micro-batch overwrites its own deterministic ``batch_id=N``
-directory, so replays rewrite byte-identical output instead of
-duplicating): near-dup corpus admission against a growing MinHash
-index (``streaming_neardup_ingest`` — the engine room of
-``pipelines.curation.curate_stream``), IVF cell-index and PQ
-code-index maintenance (``streaming_ivf_ingest`` /
-``streaming_pq_ingest``), per-batch CMS/HLL/histogram sketch
-merging, and continuous NB language-model training
-(``streaming_lang_model_ingest`` — count partials merge by addition,
-so the live model never rescans document history).
 """
 
 from __future__ import annotations
@@ -281,965 +267,3 @@ def run_stream_to_memory(
     )
     q.awaitTermination()
     return spark.table(query_name)
-
-
-def streaming_neardup_ingest(
-    doc_stream: DataFrame,
-    *,
-    index_dir: str,
-    accepted_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    num_perm: int = 32,
-    bands: int = 16,
-    threshold: float = 0.8,
-    est_threshold: float = 0.4,
-    shards_dir: str | None = None,
-    n_shards: int = 8,
-    shard_salt: str = "shuf",
-    post_filter=None,
-    post_mark=None,
-    unit: str = "word",
-) -> None:
-    """Continuously-ingested corpus near-dup removal — the streaming
-    composition of the incremental-dedup pieces (``dedup_corpus`` +
-    ``build_minhash_index`` + ``incremental_neardup``): each
-    micro-batch is (1) self-deduplicated, (2) screened against the
-    persisted MinHash index of everything accepted so far (bucket-keyed
-    join; est-Jaccard ≥ ``est_threshold`` candidates exact-verified at
-    ``threshold`` against stored accepted text), and (3) survivors land
-    in ``accepted_dir/batch_id=N`` with their index rows in
-    ``index_dir/batch_id=N``.
-
-    Exactly-once without a transactional store: both writes are
-    per-batch-directory overwrites of DETERMINISTIC content, and every
-    read of history prunes to ``batch_id < N`` — a replayed batch
-    cannot see its own partial output (which would self-match every
-    document and drop the whole batch), and re-processing rewrites
-    byte-identical results. State scale: the index is ``bands`` rows
-    per accepted doc, partition-pruned by the batch_id layout and
-    bucket-joinable without rescanning historical text.
-
-    ``shards_dir`` enables STREAMING SHARD APPEND: each batch's
-    survivors are additionally written under
-    ``shards_dir/batch_id=N/shard=K`` with the deterministic
-    ``keys.training_shards`` assignment (shard + in-shard pos derive
-    from ``md5(salt|id)``, so a doc's shard is IDENTICAL to what the
-    batch exporter would assign — membership equivalence is pinned by
-    test; ``pos`` is per-batch, documents arrive grouped by batch
-    within a shard). Same exactly-once story as the other two writes:
-    a replayed batch overwrites its own deterministic directory.
-
-    ``post_filter`` (``DataFrame -> DataFrame``, batch-mode) runs on
-    each batch's survivors AFTER dedup and before any write — the hook
-    streaming decontamination rides (``curation.curate_stream``); it
-    must be deterministic (replay rewrites its output) and per-row
-    (it sees one batch, not history).
-
-    ``post_mark`` (r5, mutually exclusive with ``post_filter``) is the
-    MARK-DON'T-DROP variant: a batch-mode fn returning the survivors
-    plus a boolean ``excluded`` column. Marked rows are written to
-    ``accepted_dir`` (flagged) AND indexed — so they keep shadowing
-    their future near-dups and their text stays available for exact
-    verification — but are left out of the shard export; consumers of
-    ``accepted_dir`` filter ``NOT excluded``. This is what makes
-    strict batch/stream decontamination equivalence possible: batch
-    mode dedups FIRST (a contaminated doc wins representative and
-    takes its shadowed near-dups with it when decontamination drops
-    it), so a stream that hard-drops contaminated docs before the
-    index admits their later clean near-dups — ``post_mark`` keeps
-    the shadow while still excluding the content
-    (``curate_stream(strict_decontam=True)``).
-
-    Drains the available input (availableNow trigger) and returns.
-    """
-    import json
-
-    from pyspark.errors import AnalysisException
-
-    from lsdm_motogp_data_integration_spark.operators.ann import (
-        _read_index_meta,
-        _write_index_meta,
-    )
-    from lsdm_motogp_data_integration_spark.operators.dedup import (
-        build_minhash_index,
-        dedup_corpus,
-        exact_jaccard_for_pairs,
-        incremental_neardup,
-    )
-
-    if post_filter is not None and post_mark is not None:
-        raise ValueError("post_filter and post_mark are mutually exclusive")
-
-    # signature-parameter sidecar (r5): the index rows are a pure
-    # function of (text, k, num_perm, bands, unit) — resuming the
-    # stream under DIFFERENT params would mix incompatible signatures
-    # in one tree and silently stop catching near-dups (a new batch's
-    # buckets never collide with history's). Same guard class as the
-    # ANN codebook sidecar. Threshold params are query-time and
-    # deliberately not pinned.
-    spark0 = doc_stream.sparkSession
-    sig_params = {
-        "kind": "minhash_index",
-        "k": int(k),
-        "num_perm": int(num_perm),
-        "bands": int(bands),
-        "unit": str(unit),
-    }
-    existing_meta = _read_index_meta(spark0, index_dir)
-    if existing_meta is not None and existing_meta != sig_params:
-        raise ValueError(
-            f"index at {index_dir} was built with "
-            f"{json.dumps(existing_meta)}; resuming with "
-            f"{json.dumps(sig_params)} would silently stop catching "
-            f"near-dups"
-        )
-    _write_index_meta(spark0, index_dir, sig_params)
-
-    def _has_prior_batches(spark, path: str, batch_id: int) -> bool:
-        # only batch_id < current counts as history: a batch that
-        # crashed between its accepted and index writes leaves ITS OWN
-        # partial batch_id=N directory behind, and treating that as
-        # "history exists" would make every replay re-raise forever —
-        # a bricked pipeline recoverable only by manual deletion
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(p):
-            return False
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if name.startswith("batch_id="):
-                try:
-                    if int(name.split("=", 1)[1]) < batch_id:
-                        return True
-                except ValueError:
-                    continue
-        return False
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        survivors = dedup_corpus(
-            batch_df, text_col, id_col, threshold=threshold,
-            k=k, unit=unit,
-        )
-        try:
-            index = spark.read.parquet(index_dir).filter(
-                F.col("batch_id") < batch_id
-            )
-            hist = spark.read.parquet(accepted_dir).filter(
-                F.col("batch_id") < batch_id
-            )
-            have_history = True
-        except AnalysisException:
-            # only a GENUINELY empty state may skip the screen: a
-            # transient read failure when PRIOR batches exist must fail
-            # the batch loudly, not silently admit historical near-dups
-            if _has_prior_batches(
-                spark, index_dir, batch_id
-            ) or _has_prior_batches(spark, accepted_dir, batch_id):
-                raise
-            have_history = False  # first batch: nothing accepted yet
-        if have_history:
-            hits = incremental_neardup(
-                survivors, index, text_col, id_col,
-                k=k, num_perm=num_perm, bands=bands,
-                threshold=est_threshold, unit=unit,
-            ).localCheckpoint(eager=True)
-            # verification needs text only for the ref docs that
-            # actually HIT (a broadcast semi-join against the small hit
-            # set) — never the whole accepted history; the per-batch
-            # history scan still lists all batch dirs but prunes to
-            # (id, text) columns and the in-file sort below lets
-            # min/max stats skip non-matching row groups
-            ref_ids = hits.select(
-                F.col("ref_id").alias(id_col)
-            ).dropDuplicates()
-            hist_needed = hist.select(id_col, text_col).join(
-                F.broadcast(ref_ids), id_col, "left_semi"
-            )
-            verify_corpus = hist_needed.unionByName(
-                survivors.select(id_col, text_col)
-            )
-            confirmed = exact_jaccard_for_pairs(
-                hits, verify_corpus, text_col, id_col,
-                "ref_id", "new_id", k=k, threshold=threshold,
-                unit=unit,
-            )
-            dup_ids = confirmed.select(
-                F.col("id_b").alias(id_col)
-            ).dropDuplicates()
-            survivors = survivors.join(dup_ids, id_col, "left_anti")
-        if post_filter is not None:
-            survivors = post_filter(survivors)
-        elif post_mark is not None:
-            survivors = post_mark(survivors)
-            if "excluded" not in survivors.columns:
-                raise ValueError(
-                    "post_mark must return an `excluded` boolean column"
-                )
-            # NULL-safety (ADVICE r5): a user post_mark whose predicate
-            # yields NULL (e.g. a three-valued comparison on a NULL
-            # column) would otherwise be silently treated as excluded
-            # by the ~excluded shard-export filter and every downstream
-            # NOT excluded consumer. Coalesce to false — the same
-            # keep-by-default convention the built-in strict_decontam
-            # marker uses
-            survivors = survivors.withColumn(
-                "excluded",
-                F.coalesce(F.col("excluded").cast("boolean"), F.lit(False)),
-            )
-        survivors = survivors.localCheckpoint(eager=True)
-        # in-file sort by id: future batches' verification semi-joins
-        # prune row groups via parquet min/max stats on the id
-        survivors.sortWithinPartitions(id_col).write.mode(
-            "overwrite"
-        ).parquet(f"{accepted_dir}/batch_id={batch_id}")
-        build_minhash_index(
-            survivors, text_col, id_col,
-            k=k, num_perm=num_perm, bands=bands, unit=unit,
-        ).write.mode("overwrite").parquet(
-            f"{index_dir}/batch_id={batch_id}"
-        )
-        if shards_dir is not None:
-            from lsdm_motogp_data_integration_spark.operators.keys import (
-                training_shards,
-            )
-
-            exportable = (
-                survivors.filter(~F.col("excluded")).drop("excluded")
-                if post_mark is not None
-                else survivors
-            )
-            (
-                training_shards(
-                    exportable, id_col, n_shards=n_shards, salt=shard_salt
-                )
-                .repartitionByRange(int(n_shards), F.col("shard"))
-                .sortWithinPartitions("shard", "pos")
-                .write.mode("overwrite")
-                .partitionBy("shard")
-                .parquet(f"{shards_dir}/batch_id={batch_id}")
-            )
-
-    q = (
-        doc_stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def streaming_cms_ingest(
-    doc_stream: DataFrame,
-    *,
-    sketch_dir: str,
-    checkpoint_dir: str,
-    term_col: str = "term",
-    width: int = 1024,
-    depth: int = 4,
-    salt: str = "cms",
-) -> None:
-    """Continuously-maintained count-min sketch: each micro-batch's
-    token stream is sketched (``sketches.count_min_sketch`` — one
-    constant-key-space aggregate) and the partial lands in
-    ``sketch_dir/batch_id=N``. The live corpus-wide sketch is the
-    counter-addition merge of all partials (``read_cms_sketch``) —
-    the CMS merge property, so readers never rescan token history.
-
-    Exactly-once without a transactional store (same contract as
-    ``streaming_neardup_ingest``): the per-batch directory overwrite
-    is DETERMINISTIC content, so a replayed batch rewrites
-    byte-identical counters instead of double-counting. State scale:
-    ≤ depth × width rows per batch regardless of batch size; compact
-    by re-summing old partials into one directory offline if batch
-    count grows unbounded.
-
-    Drains the available input (availableNow trigger) and returns."""
-    from lsdm_motogp_data_integration_spark.operators.sketches import (
-        count_min_sketch,
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        count_min_sketch(
-            batch_df, term_col, width=width, depth=depth, salt=salt
-        ).write.mode("overwrite").parquet(
-            f"{sketch_dir}/batch_id={batch_id}"
-        )
-
-    q = (
-        doc_stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def read_cms_sketch(spark, sketch_dir: str) -> DataFrame:
-    """The live merged sketch: counter addition across every per-batch
-    partial — ≤ depth × width result rows however many batches have
-    landed. Before the first batch commits (missing or empty
-    ``sketch_dir``) the natural EMPTY sketch is returned — a poller
-    racing the stream must not crash on schema inference."""
-    from pyspark.errors import AnalysisException
-
-    schema = "row int, bucket int, cnt bigint"
-    try:
-        partials = spark.read.schema(schema).parquet(sketch_dir)
-        return (
-            partials.groupBy("row", "bucket")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-    except AnalysisException:
-        return spark.createDataFrame([], schema)
-
-
-def streaming_hll_ingest(
-    doc_stream: DataFrame,
-    *,
-    sketch_dir: str,
-    checkpoint_dir: str,
-    term_col: str = "term",
-    m: int = 64,
-    salt: str = "hll",
-) -> None:
-    """Continuously-maintained HyperLogLog distinct-count registers:
-    each micro-batch is sketched (``sketches.hll_sketch`` — one
-    constant-key-space MAX aggregate) and the partial lands in
-    ``sketch_dir/batch_id=N``; the live cardinality state is the
-    register-wise MAX merge of all partials (:func:`read_hll_sketch`)
-    — exactly the sketch of the full history, with no history rescan
-    (pinned by the merge-property test).
-
-    Exactly-once by the repo's deterministic-overwrite contract
-    (same as ``streaming_cms_ingest``): a replayed batch rewrites
-    byte-identical registers instead of corrupting state. ≤ ``m``
-    rows per batch regardless of batch size.
-
-    Drains the available input (availableNow trigger) and returns."""
-    from lsdm_motogp_data_integration_spark.operators.sketches import (
-        hll_sketch,
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        hll_sketch(batch_df, term_col, m=m, salt=salt).write.mode(
-            "overwrite"
-        ).parquet(f"{sketch_dir}/batch_id={batch_id}")
-
-    q = (
-        doc_stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def streaming_histogram_ingest(
-    value_stream: DataFrame,
-    *,
-    sketch_dir: str,
-    checkpoint_dir: str,
-    value_col: str = "value",
-    lo: float,
-    hi: float,
-    n_bins: int = 128,
-) -> None:
-    """Continuously-maintained quantile state: each micro-batch's
-    values land as a fixed-grid histogram partial
-    (``sketches.histogram_sketch`` — ≤ ``n_bins`` rows) in
-    ``sketch_dir/batch_id=N``; the live distribution is the
-    counter-addition merge (:func:`read_histogram_sketch`), fed to
-    ``sketches.histogram_quantile`` for always-current percentile
-    estimates. Exactly-once by the repo's deterministic-overwrite
-    contract. Completes the mergeable-sketch trio (CMS = frequencies,
-    HLL = distincts, histogram = quantiles).
-
-    Drains the available input (availableNow trigger) and returns."""
-    from lsdm_motogp_data_integration_spark.operators.sketches import (
-        histogram_sketch,
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        histogram_sketch(
-            batch_df, value_col, lo=lo, hi=hi, n_bins=n_bins
-        ).write.mode("overwrite").parquet(
-            f"{sketch_dir}/batch_id={batch_id}"
-        )
-
-    q = (
-        value_stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def read_histogram_sketch(spark, sketch_dir: str) -> DataFrame:
-    """The live merged histogram (``bin``, ``cnt``): counter addition
-    across per-batch partials — ≤ ``n_bins`` result rows however many
-    batches have landed. Missing/empty dir = the empty histogram."""
-    from pyspark.errors import AnalysisException
-
-    schema = "bin bigint, cnt bigint"
-    try:
-        partials = spark.read.schema(schema).parquet(sketch_dir)
-        return partials.groupBy("bin").agg(F.sum("cnt").alias("cnt"))
-    except AnalysisException:
-        return spark.createDataFrame([], schema)
-
-
-def read_hll_sketch(spark, sketch_dir: str) -> DataFrame:
-    """The live merged register relation (``idx``, ``reg``): MAX across
-    every per-batch partial — ≤ ``m`` result rows however many batches
-    have landed; feed to ``sketches.hll_estimate``. Missing or empty
-    ``sketch_dir`` returns the natural EMPTY sketch (estimate 0)."""
-    from pyspark.errors import AnalysisException
-
-    schema = "idx int, reg int"
-    try:
-        partials = spark.read.schema(schema).parquet(sketch_dir)
-        return partials.groupBy("idx").agg(F.max("reg").alias("reg"))
-    except AnalysisException:
-        return spark.createDataFrame([], schema)
-
-
-def streaming_ivf_ingest(
-    vec_stream: DataFrame,
-    *,
-    index_dir: str,
-    checkpoint_dir: str,
-    codebook,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Continuously-ingested embedding corpus → IVF index maintenance:
-    each micro-batch is assigned to its nearest codebook cells (the
-    SAME shared assignment UDF as ``ann.build_ivf_index``) and written
-    as ``index_dir/batch_id=N/cell=K`` — the streaming twin of the
-    batch index builder, with the MinHash-index exactly-once story: a
-    replayed batch overwrites its own deterministic directory, never
-    appends duplicates (plain ``mode="append"`` would duplicate rows
-    under replay — that is why the batch builder's append mode is for
-    MANUAL batch addition, not for a restartable stream).
-
-    The codebook is resolved ONCE before the stream starts (matrix or
-    ``save_codebook`` path) — train-once, assign-per-batch, and
-    ``ann.ivf_topk_from_index`` serves over the whole tree unchanged:
-    ``cell`` stays a partition column under the batch_id layer, so
-    dynamic partition pruning still reads only the probed cells'
-    directories within every batch. Equivalence with a one-shot
-    ``build_ivf_index`` over the same vectors and replay idempotency
-    are pinned by test.
-
-    Drains available input (availableNow trigger) and returns."""
-    from lsdm_motogp_data_integration_spark.operators.ann import (
-        _cells_udf,
-        _drop_null_vecs,
-        _quantize,
-        _resolve_codebook,
-        _verify_index_meta,
-        _write_index_meta,
-        codebook_digest,
-    )
-    from lsdm_motogp_data_integration_spark.operators.dedup import (
-        norm_expr,
-    )
-
-    spark = vec_stream.sparkSession
-    mat = _resolve_codebook(codebook, vec_stream)
-    if mat is None:
-        raise ValueError("streaming_ivf_ingest requires a codebook")
-    # resume guard: continuing an existing tree under a DIFFERENT
-    # codebook would mix assignments from two functions (r5 sidecar)
-    _verify_index_meta(spark, index_dir, "ivf", mat)
-    _write_index_meta(
-        spark,
-        index_dir,
-        {
-            "kind": "ivf",
-            "codebook_digest": codebook_digest(mat),
-            "n_cells": int(mat.shape[0]),
-            "dim": int(mat.shape[1]),
-        },
-    )
-    qmat = _quantize(mat)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            _drop_null_vecs(batch_df, vec_col)
-            .select(
-                F.col(id_col),
-                F.col(vec_col),
-                norm_expr(F.col(vec_col)).alias("__cn"),
-                _cells_udf(qmat, 1)(F.col(vec_col))
-                .getItem(0)
-                .alias("cell"),
-            )
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(f"{index_dir}/batch_id={batch_id}")
-        )
-
-    q = (
-        vec_stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def streaming_pq_ingest(
-    vec_stream: DataFrame,
-    *,
-    index_dir: str,
-    checkpoint_dir: str,
-    codebooks,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Streaming PQ code maintenance — the PQ twin of
-    :func:`streaming_ivf_ingest`: each micro-batch is encoded against
-    the once-resolved per-subspace codebooks (shared
-    ``ann._pq_encode_udf``) and written as ``index_dir/batch_id=N``
-    with the usual per-batch-overwrite exactly-once story.
-    ``ann.pq_topk_from_index`` serves the whole tree unchanged (the
-    extra ``batch_id`` column rides along and is dropped by the
-    scoring projection). Equivalence with a one-shot
-    ``build_pq_index`` and replay idempotency are pinned by test."""
-    from lsdm_motogp_data_integration_spark.operators.ann import (
-        _drop_null_vecs,
-        _pq_encode_udf,
-        _quantize,
-        _resolve_books,
-        _verify_index_meta,
-        _write_index_meta,
-        codebook_digest,
-    )
-
-    spark = vec_stream.sparkSession
-    books = _resolve_books(codebooks, vec_stream)
-    if books is None:
-        raise ValueError("streaming_pq_ingest requires codebooks")
-    _verify_index_meta(spark, index_dir, "pq", books)
-    _write_index_meta(
-        spark,
-        index_dir,
-        {
-            "kind": "pq",
-            "codebook_digest": codebook_digest(books),
-            "n_subspaces": len(books),
-            "codes_per_book": int(books[0].shape[0]),
-            "subdim": int(books[0].shape[1]),
-        },
-    )
-    encode = _pq_encode_udf([_quantize(b) for b in books], books[0].shape[1])
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            _drop_null_vecs(batch_df, vec_col)
-            .select(
-                F.col(id_col), encode(F.col(vec_col)).alias("codes")
-            )
-            .write.mode("overwrite")
-            .parquet(f"{index_dir}/batch_id={batch_id}")
-        )
-
-    q = (
-        vec_stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def streaming_dhash_ingest(
-    media_stream: DataFrame,
-    *,
-    index_dir: str,
-    checkpoint_dir: str,
-    max_hamming: int = 6,
-    hash_w: int = 8,
-    hash_h: int = 8,
-) -> None:
-    """Continuously-ingested PERCEPTUAL image dedup (r6) — the
-    maintainer-family composition of the new dHash pieces
-    (``multimodal.image_dhash`` + ``dedup.hamming64_pairs`` /
-    ``hamming64_join``), mirroring ``streaming_neardup_ingest``'s
-    shape with an 8-bytes-per-image index instead of ``bands`` MinHash
-    rows: each micro-batch is (1) hashed (the only decode pass),
-    (2) self-deduplicated (keep the lowest media_id of each
-    within-radius pair), (3) screened against the persisted hash index
-    of everything accepted so far (pigeonhole chunk buckets — never
-    |batch|×|history|), and (4) survivors' (media_id, dhash) rows land
-    in ``index_dir/batch_id=N``. The accepted corpus IS the index —
-    callers join back to content by media_id; blobs are never
-    re-shipped or re-decoded.
-
-    Exactly-once like the other maintainers: deterministic per-batch
-    directory overwrites, history reads prune to ``batch_id < N``, and
-    a replay rewrites byte-identical rows. The ``_meta`` sidecar pins
-    (hash_w, hash_h, max_hamming): hashes from a different grid or a
-    different dedup radius are a DIFFERENT accepted-set semantics, so
-    resuming under changed params raises instead of silently mixing.
-    """
-    import json
-
-    from lsdm_motogp_data_integration_spark.operators.ann import (
-        _read_index_meta,
-        _write_index_meta,
-    )
-    from lsdm_motogp_data_integration_spark.operators.dedup import (
-        hamming64_join,
-        hamming64_pairs,
-    )
-    from lsdm_motogp_data_integration_spark.operators.multimodal import (
-        image_dhash,
-    )
-
-    spark = media_stream.sparkSession
-    params = {
-        "kind": "dhash_index",
-        "hash_w": int(hash_w),
-        "hash_h": int(hash_h),
-        "max_hamming": int(max_hamming),
-    }
-    existing = _read_index_meta(spark, index_dir)
-    if existing is not None and existing != params:
-        raise ValueError(
-            f"dhash index at {index_dir} was built with "
-            f"{json.dumps(existing)}; resuming with "
-            f"{json.dumps(params)} would change the accepted-set "
-            f"semantics mid-stream"
-        )
-    _write_index_meta(spark, index_dir, params)
-
-    def _has_prior_batches(path: str, batch_id: int) -> bool:
-        # Hadoop FS listing (works on HDFS/S3/local alike — an
-        # os.listdir would strand the guard on local disk); only
-        # batch_id < current counts as history, so a batch that
-        # crashed after writing ITS OWN partial directory replays
-        # cleanly instead of re-raising forever
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(p):
-            return False
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if name.startswith("batch_id="):
-                try:
-                    if int(name.split("=", 1)[1]) < batch_id:
-                        return True
-                except ValueError:
-                    continue
-        return False
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
-        hashes = image_dhash(
-            batch_df, hash_w=hash_w, hash_h=hash_h
-        ).filter(F.col("dhash").isNotNull())
-        # the relation feeds the self-join AND the screen AND the
-        # write: pin it (8 bytes/image — the cheapest checkpoint in
-        # the engine)
-        hashes = hashes.localCheckpoint(eager=True)
-        # (2) within-batch self-dedup: keep the lowest media_id of
-        # each within-radius pair (the dedup_corpus keep-first rule)
-        dups = hamming64_pairs(
-            hashes, "media_id", "dhash", max_hamming=max_hamming,
-            collapse_identical=True,
-        ).select(F.col("id_b").alias("media_id")).dropDuplicates()
-        survivors = hashes.join(dups, "media_id", "left_anti")
-        # (3) screen against accepted history (batch_id < N only —
-        # a replayed batch must not see its own partial output)
-        try:
-            hist = spark.read.parquet(index_dir).filter(
-                F.col("batch_id") < batch_id
-            )
-            have_history = True
-        except AnalysisException:
-            if _has_prior_batches(index_dir, batch_id):
-                raise
-            have_history = False
-        if have_history:
-            hits = hamming64_join(
-                survivors,
-                hist.select("media_id", "dhash"),
-                "media_id",
-                "dhash",
-                max_hamming=max_hamming,
-            ).select(F.col("new_id").alias("media_id")).dropDuplicates()
-            survivors = survivors.join(hits, "media_id", "left_anti")
-        survivors.select("media_id", "dhash").sortWithinPartitions(
-            "media_id"
-        ).write.mode("overwrite").parquet(
-            f"{index_dir}/batch_id={batch_id}"
-        )
-
-    q = (
-        media_stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def read_dhash_index(spark, index_dir: str):
-    """The accepted perceptual index from
-    :func:`streaming_dhash_ingest`: (media_id, dhash) rows plus the
-    recovered params. Raises without the sidecar — serving a hash
-    index at the wrong grid/radius is silently wrong, never an
-    error, otherwise. Returns (DataFrame, params_dict)."""
-    from lsdm_motogp_data_integration_spark.operators.ann import (
-        _read_index_meta,
-    )
-
-    meta = _read_index_meta(spark, index_dir)
-    if meta is None or meta.get("kind") != "dhash_index":
-        raise ValueError(f"no dhash_index _meta sidecar at {index_dir}")
-    return (
-        spark.read.parquet(index_dir).select("media_id", "dhash"),
-        meta,
-    )
-
-
-def streaming_lang_model_ingest(
-    doc_stream: DataFrame,
-    *,
-    partials_dir: str,
-    checkpoint_dir: str,
-    label_col: str = "lang",
-    text_col: str = "text",
-    n_buckets: int = 64,
-    char_n: int = 3,
-    portable: bool = False,
-) -> None:
-    """Continuously-trained NB language model (r5) — the trainer-side
-    twin of the sketch maintainers: NB sufficient statistics are plain
-    COUNTS (gram-bucket occurrences per label + documents per label),
-    which merge by addition, so each micro-batch writes its count
-    partial to ``partials_dir/batch_id=N`` and the live model is
-    derived from the summed partials (:func:`lang_model_from_partials`)
-    without ever rescanning document history. Per-label doc counts
-    ride the same relation as ``bucket = -1`` rows.
-
-    Stream == one-shot ``train_lang_nb`` bit-for-bit (shared finishing
-    math, ``scoring._nb_model_from_counts``; pinned by test), replay
-    idempotent via the deterministic per-batch directory overwrite,
-    and the ``_meta`` params sidecar is verified on resume — a stream
-    continued under different hash params would corrupt the counts
-    silently otherwise. State scale: ≤ n_labels × (n_buckets + 1)
-    rows per batch regardless of batch size.
-
-    Drains the available input (availableNow trigger) and returns."""
-    import json
-
-    from lsdm_motogp_data_integration_spark.operators.ann import (
-        _read_index_meta,
-        _write_index_meta,
-    )
-    from lsdm_motogp_data_integration_spark.operators.scoring import (
-        char_ngram_buckets,
-    )
-
-    spark = doc_stream.sparkSession
-    params = {
-        "kind": "lang_nb_partials",
-        "n_buckets": int(n_buckets),
-        "char_n": int(char_n),
-        "portable": bool(portable),
-    }
-    existing = _read_index_meta(spark, partials_dir)
-    if existing is not None and existing != params:
-        raise ValueError(
-            f"partials at {partials_dir} were built with "
-            f"{json.dumps(existing)}; resuming with "
-            f"{json.dumps(params)} would corrupt the counts"
-        )
-    _write_index_meta(spark, partials_dir, params)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # NULL labels are absent supervision, not a class (the
-        # train_lang_nb rule — batch/stream counts must agree)
-        batch_df = batch_df.filter(F.col(label_col).isNotNull())
-        b = char_ngram_buckets(text_col, n_buckets, char_n, portable)
-        gram_counts = (
-            batch_df.select(
-                F.col(label_col).alias("label"),
-                F.explode(b).alias("bucket"),
-            )
-            .groupBy("label", "bucket")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        doc_counts = batch_df.groupBy(
-            F.col(label_col).alias("label")
-        ).agg(F.count(F.lit(1)).alias("cnt")).select(
-            "label", F.lit(-1).cast("bigint").alias("bucket"), "cnt"
-        )
-        gram_counts.unionByName(doc_counts).write.mode(
-            "overwrite"
-        ).parquet(f"{partials_dir}/batch_id={batch_id}")
-
-    q = (
-        doc_stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def lang_model_from_partials(spark, partials_dir: str):
-    """The live NB model from :func:`streaming_lang_model_ingest`
-    partials: sum the per-batch count relations (the count-merge
-    property — no document history rescan), then run the SAME
-    finishing math as one-shot training
-    (``scoring._nb_model_from_counts``). Returns a
-    :class:`scoring.LangNBModel` with the params recovered from the
-    ``_meta`` sidecar; raises before the first partial lands (there
-    is no model to serve yet) or when the sidecar is missing."""
-    from lsdm_motogp_data_integration_spark.operators.ann import (
-        _read_index_meta,
-    )
-    from lsdm_motogp_data_integration_spark.operators.scoring import (
-        LangNBModel,
-        _nb_model_from_counts,
-    )
-
-    meta = _read_index_meta(spark, partials_dir)
-    if meta is None or meta.get("kind") != "lang_nb_partials":
-        raise ValueError(
-            f"no lang_nb_partials _meta sidecar at {partials_dir}"
-        )
-    schema = "label string, bucket bigint, cnt bigint"
-    partials = spark.read.schema(schema).parquet(partials_dir)
-    summed = partials.groupBy("label", "bucket").agg(
-        F.sum("cnt").alias("cnt")
-    )
-    counts = summed.filter(F.col("bucket") >= 0)
-    label_docs = summed.filter(F.col("bucket") == -1).select(
-        "label", F.col("cnt").alias("nl")
-    )
-    rows = _nb_model_from_counts(
-        counts, label_docs, int(meta["n_buckets"])
-    ).collect()
-    if not rows:
-        raise ValueError(
-            f"no partials under {partials_dir} yet — the stream has "
-            f"not committed a batch"
-        )
-    return LangNBModel(
-        rows=rows,
-        n_buckets=int(meta["n_buckets"]),
-        char_n=int(meta["char_n"]),
-        portable=bool(meta["portable"]),
-    )
-
-
-def lang_model_drift(spark, model_a, model_b) -> DataFrame:
-    """Drift report between two NB language models (r6; VERDICT r5
-    next-round #8) — the observability piece continuous training was
-    missing: :func:`streaming_lang_model_ingest` keeps folding batches
-    into the count partials, and this report says WHAT each new
-    snapshot changed, per label:
-
-    - ``status``: 'added' (label first seen in ``model_b``),
-      'removed', or 'kept';
-    - ``prior_a`` / ``prior_b`` / ``prior_delta``: the class doc-share
-      ``exp(logprior)`` of each side and its change — a corpus whose
-      language mix is shifting shows up here first (the q53 langmix
-      signal read off the model instead of the corpus);
-    - ``gram_l1``: L1 distance between the two smoothed gram-bucket
-      distributions ``Σ_b |exp(logp_b) − exp(logp_a)|`` ∈ [0, 2] —
-      within-label drift (topic/orthography change) that priors can't
-      see. NULL for added/removed labels (no counterpart side).
-
-    Models may be :class:`scoring.LangNBModel` (params travel; a
-    hash-param mismatch between the two sides raises — drift between
-    models in different feature spaces is meaningless) or raw
-    rows/DataFrames (caller vouches the params match). All math runs
-    driver-side on the metadata-sized model rows (n_labels ×
-    (n_buckets + 1)); values are 6dp-rounded for stable pinning."""
-    import math
-
-    from lsdm_motogp_data_integration_spark.operators.scoring import (
-        LangNBModel,
-    )
-
-    def norm(m):
-        params = None
-        if isinstance(m, LangNBModel):
-            params = (m.n_buckets, m.char_n, m.portable)
-            m = m.rows
-        elif isinstance(m, DataFrame):
-            m = m.collect()
-        priors, grams = {}, {}
-        for r in m:
-            if r["bucket"] == -1:
-                priors[r["label"]] = float(r["logp"])
-            else:
-                grams.setdefault(r["label"], {})[int(r["bucket"])] = float(
-                    r["logp"]
-                )
-        return params, priors, grams
-
-    pa, priors_a, grams_a = norm(model_a)
-    pb, priors_b, grams_b = norm(model_b)
-    if pa is not None and pb is not None and pa != pb:
-        raise ValueError(
-            f"model params differ (a={pa}, b={pb}) — drift between "
-            f"models in different feature spaces is meaningless; "
-            f"retrain instead of comparing"
-        )
-    out = []
-    for lb in sorted(set(priors_a) | set(priors_b)):
-        in_a, in_b = lb in priors_a, lb in priors_b
-        status = "kept" if (in_a and in_b) else ("added" if in_b else "removed")
-        prior_a = round(math.exp(priors_a[lb]), 6) if in_a else None
-        prior_b = round(math.exp(priors_b[lb]), 6) if in_b else None
-        gram_l1 = None
-        if in_a and in_b:
-            ga, gb = grams_a.get(lb, {}), grams_b.get(lb, {})
-            gram_l1 = round(
-                sum(
-                    abs(
-                        math.exp(gb.get(k, float("-inf")))
-                        - math.exp(ga.get(k, float("-inf")))
-                    )
-                    for k in set(ga) | set(gb)
-                ),
-                6,
-            )
-        out.append(
-            (
-                lb,
-                status,
-                prior_a,
-                prior_b,
-                round((prior_b or 0.0) - (prior_a or 0.0), 6),
-                gram_l1,
-            )
-        )
-    return spark.createDataFrame(
-        out,
-        "label string, status string, prior_a double, prior_b double, "
-        "prior_delta double, gram_l1 double",
-    )

@@ -213,84 +213,6 @@ def test_weighted_simhash_separates_filler_dominated_docs(spark):
     assert weighted == again
 
 
-def test_dedup_corpus_keeps_one_per_cluster(spark, sf_dir):
-    """End-to-end removal: originals + 100k-offset variants collapse to
-    one representative (the original, smallest id) per near-dup
-    cluster; non-duplicated docs all survive."""
-    from lsdm_motogp_data_integration_spark.operators.dedup import (
-        dedup_corpus,
-    )
-    from lsdm_motogp_data_integration_spark.sources import read_table
-
-    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    variants = d.filter(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") + 100000).alias("doc_id"), "text"
-    )
-    corpus = d.unionByName(variants)
-    deduped = dedup_corpus(corpus, "text", "doc_id")
-    surviving = {r["doc_id"] for r in deduped.collect()}
-    all_ids = {r["doc_id"] for r in corpus.select("doc_id").collect()}
-    dropped = all_ids - surviving
-    # the planted suffix variants must collapse
-    assert dropped, "nothing was deduplicated"
-    # every dropped doc was in a near-dup pair with a smaller-id doc
-    pair_rows = minhash_lsh_pairs(
-        corpus, "text", "doc_id", threshold=0.8
-    ).collect()
-    in_pairs = {r["id_a"] for r in pair_rows} | {
-        r["id_b"] for r in pair_rows
-    }
-    assert dropped <= in_pairs
-    # the surviving corpus is pairwise near-dup free (one rep per
-    # component; all pairs live inside components)
-    assert (
-        minhash_lsh_pairs(deduped, "text", "doc_id", threshold=0.8).count()
-        == 0
-    )
-
-
-def test_dedup_corpus_keep_by_quality(spark, sf_dir):
-    """keep_by keeps the HIGHEST-scoring cluster member (not the
-    smallest id), with score ties falling back to smallest id."""
-    from lsdm_motogp_data_integration_spark.operators.dedup import (
-        dedup_corpus,
-    )
-    from lsdm_motogp_data_integration_spark.sources import read_table
-
-    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    variants = d.filter(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") + 100000).alias("doc_id"), "text"
-    )
-    corpus = d.unionByName(variants).withColumn(
-        # variants outscore originals -> keep_by must flip the default
-        # survivor choice for every exact-duplicate cluster
-        "score",
-        F.when(F.col("doc_id") >= 100000, F.lit(2.0)).otherwise(F.lit(1.0)),
-    )
-    kept = dedup_corpus(
-        corpus, "text", "doc_id", keep_by=F.col("score")
-    )
-    kept_ids = {r["doc_id"] for r in kept.select("doc_id").collect()}
-    # every original with a planted exact duplicate shares a cluster
-    # with a score-2.0 variant, so it can never be the survivor (one
-    # survivor per cluster; clusters may merge several planted pairs,
-    # so not every individual variant survives — but some must)
-    originals_with_variant = {
-        r["doc_id"]
-        for r in d.filter(F.col("doc_id") % 5 == 0)
-        .select("doc_id")
-        .collect()
-    }
-    for oid in originals_with_variant:
-        assert oid not in kept_ids, oid
-    assert any(k >= 100000 for k in kept_ids)
-    # determinism under a different partition layout
-    again = dedup_corpus(
-        corpus.repartition(7), "text", "doc_id", keep_by=F.col("score")
-    )
-    assert kept_ids == {r["doc_id"] for r in again.select("doc_id").collect()}
-
-
 def test_incremental_neardup_against_saved_index(spark, tmp_path_factory):
     """A new batch checked against a parquet-persisted MinHash index:
     near-dups of indexed docs are found via the estimated-Jaccard
@@ -537,25 +459,6 @@ def test_simhash_null_text_produces_no_pairs_both_modes(spark):
         assert 1 not in ids and 2 not in ids, weighting
 
 
-def test_dedup_corpus_exact_cluster_collapses_before_banding(spark):
-    """100 byte-identical docs + 1 near-dup + 1 unique: the exact
-    prestage must leave one survivor for the identical group and the
-    result must still close the near-dup into the same cluster."""
-    from lsdm_motogp_data_integration_spark.operators.dedup import (
-        dedup_corpus,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog again and again " * 3
-    rows = [(i, base) for i in range(100)]
-    rows.append((200, base + "tail words"))
-    rows.append((300, "completely different content about databases"))
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = sorted(
-        r["doc_id"] for r in dedup_corpus(df, "text", "doc_id").collect()
-    )
-    assert out == [0, 300]  # min-id survivor of the merged cluster + unique
-
-
 def test_connected_components_rejects_zero_iterations(spark):
     import pytest
 
@@ -730,40 +633,6 @@ def test_containment_matches_bruteforce_and_prefix_filter_is_lossless(
     assert got == expect and len(expect) > 0
 
 
-def test_containment_dedup_drops_subsets_keeps_supersets(spark):
-    """Strict subsets are dropped, the superset survives; exact-copy
-    groups keep exactly the min id; unrelated docs untouched."""
-    from lsdm_motogp_data_integration_spark.operators.dedup import (
-        containment_dedup,
-    )
-
-    para = " ".join(f"q{i}" for i in range(30))
-    page = (
-        " ".join(f"pre{i}" for i in range(50))
-        + " " + para + " "
-        + " ".join(f"post{i}" for i in range(50))
-    )
-    other = " ".join(f"n{i}" for i in range(40))
-    df = spark.createDataFrame(
-        [
-            (1, para),      # contained in 2 -> dropped
-            (2, page),      # superset -> kept
-            (3, other),     # unrelated -> kept
-            (4, page),      # exact copy of 2: min id wins -> dropped
-            (5, para),      # exact copy of 1; 1 and 5 both contained in
-                            # 2/4 -> both dropped
-        ],
-        "doc_id bigint, text string",
-    )
-    kept = sorted(
-        r["doc_id"]
-        for r in containment_dedup(
-            df, "text", "doc_id", k=5, threshold=0.9
-        ).collect()
-    )
-    assert kept == [2, 3]
-
-
 def test_char_shingles_catch_cjk_neardups_word_shingles_miss(spark):
     """char-unit shingle_sets (r4): CJK text has no whitespace, so the
     word tokenizer yields ONE giant token per run and word 5-grams
@@ -826,42 +695,6 @@ def test_char_shingles_catch_cjk_neardups_word_shingles_miss(spark):
 
     with __import__("pytest").raises(ValueError):
         shingle_sets(df, "text", "doc_id", unit="byte")
-
-
-def test_dedup_corpus_char_unit_removes_cjk_neardups(spark):
-    """dedup_corpus(unit=\"char\") (r4): the one-call pipeline removes
-    CJK near-dups the default word basis cannot see; survivor = min id
-    per cluster; the default path is unchanged (word basis keeps both
-    near-dup variants, collapsing only the exact dup)."""
-    from lsdm_motogp_data_integration_spark.operators.dedup import (
-        dedup_corpus,
-    )
-
-    zh = (
-        "机器学习模型的训练数据质量决定了最终效果"
-        "数据清洗和去重是数据管线中最重要的步骤之一"
-        "近似重复文档会让模型记住重复内容并降低泛化能力"
-    )
-    rows = [
-        (1, zh),
-        (2, zh + "结尾稍有不同"),
-        (3, zh),
-        (4, "完全不同的文本讨论分布式计算引擎的查询优化器"
-            "包括谓词下推列裁剪和连接重排序等经典技术内容"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    char_ids = {
-        r["doc_id"]
-        for r in dedup_corpus(
-            df, "text", "doc_id", threshold=0.5, k=8, unit="char"
-        ).collect()
-    }
-    assert char_ids == {1, 4}  # 2 and 3 fall into 1's cluster
-    word_ids = {
-        r["doc_id"]
-        for r in dedup_corpus(df, "text", "doc_id", threshold=0.5).collect()
-    }
-    assert word_ids == {1, 2, 4}  # only the exact dup (3) collapses
 
 
 def test_fused_char_mins_match_signature_over_char_shingles(spark):

@@ -1,6 +1,5 @@
-"""Media curation pipeline (r6): header screens + funnel report,
-container-independent exact dedup, per-modality perceptual dedup with
-keep-lowest-id, and the metadata-only (mp4/mp3) fallback paths."""
+"""Media corpus screens (r6): per-screen header flags, the funnel
+report, the dataset card, and the metadata-only (mp4/mp3) paths."""
 
 import numpy as np
 import pytest
@@ -13,7 +12,7 @@ from lsdm_motogp_data_integration_spark.operators.multimodal import (
     MEDIA_SCHEMA,
 )
 from lsdm_motogp_data_integration_spark.pipelines.media import (
-    curate_media,
+    media_screen_flags,
     media_screen_report,
 )
 
@@ -67,11 +66,13 @@ def corpus(spark):
 _SCREEN_KW = dict(min_width=4, min_height=4, min_duration_ms=10)
 
 
+def _survivors(media, **screen_kwargs) -> set:
+    flags = media_screen_flags(media, **screen_kwargs)
+    return {r["media_id"] for r in flags.filter("keep").collect()}
+
+
 def test_screens_and_funnel(corpus):
-    survivors = {
-        r["media_id"]
-        for r in curate_media(corpus, dedup=None, **_SCREEN_KW).collect()
-    }
+    survivors = _survivors(corpus, **_SCREEN_KW)
     # 5 fails dims; 13/14 fail parse; 12 (mp3, 4 frames ≈ 104 ms)
     # PASSES the 10 ms floor here — the 200 ms floor drops it in
     # test_duration_screen_uses_walked_metadata
@@ -90,77 +91,34 @@ def test_screens_and_funnel(corpus):
 def test_duration_screen_uses_walked_metadata(corpus):
     # mp3 skeleton: 4 frames ≈ 104 ms; a 200 ms floor drops it AND
     # the 16 ms wav twin (64 frames @ 4 kHz)
-    survivors = {
-        r["media_id"]
-        for r in curate_media(
-            corpus, dedup=None, min_duration_ms=200
-        ).collect()
-    }
+    survivors = _survivors(corpus, min_duration_ms=200)
     assert 12 not in survivors
     assert 7 not in survivors  # 64 frames @ 4000 Hz = 16 ms
     assert 10 in survivors  # 60 s mp4
 
 
-def test_digest_dedup_is_container_independent(corpus):
-    survivors = {
-        r["media_id"]
-        for r in curate_media(
-            corpus, dedup="digest", **_SCREEN_KW
-        ).collect()
-    }
-    # 2 is the SAME decoded pixels as 1 in a different container →
-    # only the lower id survives; 11 is a byte-copy of mp4 10 →
-    # raw-digest fallback kills it
-    assert 1 in survivors and 2 not in survivors
-    assert 10 in survivors and 11 not in survivors
-    # perceptual twins SURVIVE digest-only dedup
-    assert 3 in survivors and 7 in survivors and 9 in survivors
-
-
-def test_perceptual_dedup_keeps_lowest_id(corpus):
-    survivors = {
-        r["media_id"]
-        for r in curate_media(
-            # radius 8: the audio NN-resample twin's envelope picks
-            # don't compose bit-exactly across 128→64→65 points (a
-            # few sign flips); image/video brightness twins are
-            # 0 bits and distinct media sit at the ~32-bit baseline
-            corpus, dedup="perceptual", dhash_radius=8, **_SCREEN_KW
-        ).collect()
-    }
-    # image twin 3, audio twin 7, video twin 9 all collapse onto
-    # their lower-id originals; distinct image 4 survives
-    assert 1 in survivors and 3 not in survivors
-    assert 6 in survivors and 7 not in survivors
-    assert 8 in survivors and 9 not in survivors
-    assert 4 in survivors
-    assert 10 in survivors and 11 not in survivors
-
-
 def test_keep_fmts_screen(corpus):
-    survivors = {
-        r["media_id"]
-        for r in curate_media(
-            corpus, dedup=None, keep_fmts=("png", "wav")
-        ).collect()
-    }
+    survivors = _survivors(corpus, keep_fmts=("png", "wav"))
     assert survivors == {1, 3, 4, 5, 6, 7}
 
 
 def test_output_carries_metadata_columns(corpus):
-    out = curate_media(corpus, dedup=None, **_SCREEN_KW)
+    out = media_screen_flags(corpus, **_SCREEN_KW)
     cols = set(out.columns)
     assert {"media_id", "kind", "content", "fmt", "n_bytes", "width",
             "height", "duration_ms"} <= cols
-    assert not any(c.startswith("keep") for c in cols)
+    assert {c for c in cols if c.startswith("keep")} == {
+        "keep", "keep_parse", "keep_fmt", "keep_dims", "keep_duration",
+        "keep_size",
+    }
     row = {r["media_id"]: r for r in out.collect()}
     assert row[10]["fmt"] == "mp4" and row[10]["duration_ms"] == 60000
     assert row[1]["width"] == 12 and row[1]["height"] == 10
 
 
 def test_jpeg_blob_through_pipeline(spark):
-    # a JPEG flows the whole way: screens see header dims, digest
-    # dedup decodes it, perceptual pass hashes it
+    # a JPEG passes the screens on its header dims, next to a PNG of
+    # the same pixels
     blocks = np.random.RandomState(2).randint(
         0, 256, size=(2, 3), dtype=np.uint8
     )
@@ -168,121 +126,24 @@ def test_jpeg_blob_through_pipeline(spark):
     flat8 = np.full((8, 8), 8, np.int64)
     rows = [
         (1, "image", encode_jpeg(img, quant=flat8), None),
-        # same pixels as a GRAY png (both decode single-channel):
-        # digest-dedups against the jpeg because the flat-8
-        # constant-block jpeg is EXACT
+        # the same pixels as a GRAY png
         (2, "image", mc.encode_png(img), None),
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    survivors = {
-        r["media_id"]
-        for r in curate_media(media, dedup="digest").collect()
+    flags = {
+        r["media_id"]: r
+        for r in media_screen_flags(media, min_width=16).collect()
     }
-    assert survivors == {1}
-
-
-def test_curate_media_stream_matches_batch(spark, tmp_path_factory):
-    """The streaming form: same screens, exact dedup within AND
-    across batches (container-independent), image-perceptual history
-    screen, exactly-once replay, params-resume guard — and the
-    accepted set equals batch curate_media on the union when lower
-    ids arrive first."""
-    from lsdm_motogp_data_integration_spark.operators.multimodal import (
-        _nn_resize,
-    )
-    from lsdm_motogp_data_integration_spark.pipelines.media import (
-        curate_media_stream,
-    )
-
-    base = (
-        np.add.outer(np.arange(24) * 8, np.arange(28) * 4) % 256
-    ).astype(np.uint8)
-    img_a = np.stack(
-        [base, 255 - base, (base.astype(int) * 2 % 256).astype(np.uint8)],
-        axis=2,
-    )
-    img_new = np.random.RandomState(9).randint(
-        0, 256, (24, 28, 3), dtype=np.uint8
-    )
-    wave = (7000 * np.sin(np.arange(64) / 5.0)).astype(np.int16)
-    b1 = [
-        (1, "image", mc.encode_bmp(img_a), None),
-        (2, "image", mc.encode_bmp(img_a), None),  # in-batch exact twin
-        (3, "audio", mc.encode_wav(wave, 8000), None),
-        (4, "image", mc.encode_png(_img(5, 3, 3)), None),  # fails dims
-    ]
-    b2 = [
-        # re-encoded twin of 1 (exact decoded digest): history-killed
-        (10, "image", mc.encode_png(img_a), None),
-        # NN-resized twin of 1: PERCEPTUAL history kill
-        (11, "image", mc.encode_ppm(_nn_resize(img_a, 14, 12)), None),
-        (12, "image", mc.encode_bmp(img_new), None),  # genuinely new
-        (13, "audio", mc.encode_wav(wave, 8000), None),  # exact twin of 3
-    ]
-    src = str(tmp_path_factory.mktemp("mc_src"))
-    for i, rows in enumerate((b1, b2)):
-        spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(
-            1
-        ).write.parquet(f"{src}/f{i}")
-    index = str(tmp_path_factory.mktemp("mc_idx"))
-    ckpt = str(tmp_path_factory.mktemp("mc_ck"))
-    out = str(tmp_path_factory.mktemp("mc_out"))
-
-    def drain(**over):
-        curate_media_stream(
-            spark.readStream.schema(MEDIA_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src),
-            index_dir=index,
-            checkpoint_dir=ckpt,
-            out_dir=out,
-            **{
-                "dedup": "perceptual",
-                "dhash_radius": 10,
-                "min_width": 4,
-                "min_height": 4,
-                **over,
-            },
-        )
-
-    drain()
-    got = spark.read.parquet(out)
-    accepted = {r["media_id"] for r in got.collect()}
-    assert accepted == {1, 3, 12}
-    # blobs + metadata columns landed in the curated corpus
-    row = {r["media_id"]: r for r in got.collect()}
-    assert row[1]["fmt"] == "bmp" and row[1]["content"] is not None
-    # batch equivalence on the union (lower ids arrived first)
-    from lsdm_motogp_data_integration_spark.pipelines.media import (
-        curate_media,
-    )
-
-    union = spark.createDataFrame(b1 + b2, MEDIA_SCHEMA)
-    batch_ids = {
-        r["media_id"]
-        for r in curate_media(
-            union, dedup="perceptual", dhash_radius=10,
-            min_width=4, min_height=4,
-        ).collect()
-    }
-    assert batch_ids == accepted
-    # replay is idempotent
-    drain()
-    again = {
-        r["media_id"] for r in spark.read.parquet(out).collect()
-    }
-    assert again == accepted
-    # resume under a different policy refuses
-    with pytest.raises(ValueError, match="accepted-set semantics"):
-        drain(dedup="digest")
+    assert flags[1]["fmt"] == "jpeg" and flags[2]["fmt"] == "png"
+    for r in flags.values():
+        assert (r["width"], r["height"]) == (24, 16) and r["keep"]
 
 
 def test_media_dataset_card(corpus):
     """The per-(kind, fmt) dataset card (r7): every input blob is
     accounted for (unparseable/NULL under fmt=NULL), counts/bytes/
     dims/durations all from the O(header) flags relation, and n_kept
-    reports against the same screens curate_media applies."""
+    reports against the screens of media_screen_flags."""
     from lsdm_motogp_data_integration_spark.pipelines.media import (
         media_dataset_card,
     )

@@ -10,34 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def test_dedup_corpus_keep_by_string_ids(spark):
-    from lsdm_motogp_data_integration_spark.operators.dedup import (
-        dedup_corpus,
-    )
-
-    base = (
-        "the quick brown fox jumps over the lazy dog again and again "
-        "and keeps on jumping through the long afternoon hours"
-    )
-    df = spark.createDataFrame(
-        [
-            ("doc-a", base, 0.2),
-            ("doc-b", base + " extra", 0.9),  # near-dup, higher score
-            ("doc-z", "completely different words entirely here with "
-                      "nothing shared between the two document texts "
-                      "at all in any of the overlapping windows", 0.5),
-        ],
-        "id string, text string, score double",
-    )
-    kept = dedup_corpus(
-        df, "text", "id", threshold=0.5, keep_by=F.col("score")
-    )
-    ids = {r["id"] for r in kept.collect()}
-    # the higher-scoring near-dup member survives; string ids must not
-    # be silently null-cast by the survivor selection
-    assert ids == {"doc-b", "doc-z"}
-
-
 def test_lang_id_null_and_empty_text_is_und(spark):
     from lsdm_motogp_data_integration_spark.operators.textops import (
         lang_id,

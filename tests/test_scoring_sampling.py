@@ -582,69 +582,8 @@ def test_lang_nb_verdict_column_matches_classifier(spark, sf_dir):
 
     with pytest.raises(ValueError, match="grid incomplete"):
         lang_nb_verdict("text", model, n_buckets=128, char_n=3, portable=True)
-
-
-def test_lang_model_save_load_roundtrip(spark, tmp_path):
-    """Model persistence with provenance (r5): save_lang_model writes
-    the rows + a _meta sidecar carrying the training params;
-    load_lang_model recovers BOTH, verdicts survive the round-trip
-    bit-identically through either scorer, conflicting explicit params
-    raise, and a sidecar-less tree refuses to load (no safe default
-    for the hash params)."""
-    import pytest
-
-    from lsdm_motogp_data_integration_spark.operators.scoring import (
-        classify_lang_nb,
-        lang_nb_verdict,
-        load_lang_model,
-        save_lang_model,
-        train_lang_nb,
-    )
-
-    rows = [
-        (1, "the cat sat on the mat and the dog ran through the field", "en"),
-        (2, "a informação chegou à estação e a decisão não foi fácil", "pt"),
-        (3, "la información llegó a la estación y la decisión fue clara", "es"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string, lang string")
-    kw = dict(n_buckets=32, char_n=3, portable=True)
-    trained = train_lang_nb(df, "lang", "text", **kw)
-
-    path = str(tmp_path / "lang_model")
-    save_lang_model(trained, spark, path, **kw)
-    loaded = load_lang_model(spark, path)
-    assert (loaded.n_buckets, loaded.char_n, loaded.portable) == (32, 3, True)
-
-    # round-trip verdict identity through BOTH scorer forms — no
-    # params needed at serve time, they travel with the model
-    direct = sorted(map(tuple, classify_lang_nb(df, trained, **kw).collect()))
-    via_model = sorted(map(tuple, classify_lang_nb(df, loaded).collect()))
-    assert via_model == direct
-    col_direct = {
-        r["doc_id"]: r["v"]
-        for r in df.select(
-            "doc_id", lang_nb_verdict("text", trained, **kw).alias("v")
-        ).collect()
-    }
-    col_loaded = {
-        r["doc_id"]: r["v"]
-        for r in df.select(
-            "doc_id", lang_nb_verdict("text", loaded).alias("v")
-        ).collect()
-    }
-    assert col_loaded == col_direct
-
-    # explicit params that disagree with the model's raise
-    with pytest.raises(ValueError, match="conflicts"):
-        lang_nb_verdict("text", loaded, n_buckets=64)
-    with pytest.raises(ValueError, match="conflicts"):
-        classify_lang_nb(df, loaded, char_n=2)
-
-    # a bare parquet without the sidecar refuses to load
-    bare = str(tmp_path / "bare")
-    trained.write.parquet(bare)
-    with pytest.raises(ValueError, match="sidecar"):
-        load_lang_model(spark, bare)
+    with pytest.raises(ValueError, match="grid incomplete"):
+        classify_lang_nb(d, model, n_buckets=128, char_n=3, portable=True)
 
 
 def test_lang_nb_null_text_and_null_labels(spark):
@@ -691,11 +630,12 @@ def test_lang_nb_null_text_and_null_labels(spark):
 
 
 def test_lang_nb_empty_model_raises(spark):
-    """An empty model (all-NULL-label corpus) fails loudly in the
-    Column scorer instead of yielding NULL verdicts row by row."""
+    """An empty model (all-NULL-label corpus) fails loudly in both
+    scorer forms instead of yielding NULL verdicts row by row."""
     import pytest
 
     from lsdm_motogp_data_integration_spark.operators.scoring import (
+        classify_lang_nb,
         lang_nb_verdict,
         train_lang_nb,
     )
@@ -706,86 +646,5 @@ def test_lang_nb_empty_model_raises(spark):
     model = train_lang_nb(df, "lang", "text", n_buckets=32)
     with pytest.raises(ValueError, match="empty lang_nb model"):
         lang_nb_verdict("text", model, n_buckets=32)
-
-
-def test_lang_model_digest_and_grid_guards(spark, tmp_path):
-    """r6 provenance hardening (VERDICT r5 #7 + ADVICE): a saved model
-    that is modified after save_lang_model raises at load (content
-    digest in the _meta sidecar); save derives n_buckets from the rows
-    and refuses an explicit value that disagrees; classify_lang_nb now
-    fails as loudly as lang_nb_verdict on an empty model or a
-    train/serve grid mismatch."""
-    import pytest
-
-    from lsdm_motogp_data_integration_spark.operators.scoring import (
-        classify_lang_nb,
-        load_lang_model,
-        save_lang_model,
-        train_lang_nb,
-    )
-
-    rows = [
-        (1, "the cat sat on the mat and the dog ran through the field", "en"),
-        (2, "a informação chegou à estação e a decisão não foi fácil", "pt"),
-    ]
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(rows, "doc_id bigint, text string, lang string")
-    kw = dict(n_buckets=32, char_n=3, portable=True)
-    trained = train_lang_nb(df, "lang", "text", **kw)
-
-    # save derives n_buckets=32 from the rows; a wrong explicit value
-    # refuses instead of recording wrong provenance (the ADVICE-medium
-    # failure: old code recorded the 64-default for a 32-bucket model)
-    path = str(tmp_path / "m_ok")
-    with pytest.raises(ValueError, match="disagrees"):
-        save_lang_model(trained, spark, path, n_buckets=64, char_n=3)
-    save_lang_model(trained, spark, path, char_n=3, portable=True)
-    loaded = load_lang_model(spark, path)
-    assert loaded.n_buckets == 32  # derived, not defaulted
-
-    # hand-edit the model parquet after save: load fails the digest
-    bad = str(tmp_path / "m_bad")
-    save_lang_model(trained, spark, bad, char_n=3, portable=True)
-    tampered = spark.read.parquet(bad).withColumn(
-        "logp",
-        F.when(F.col("bucket") == 0, F.col("logp") + 0.5).otherwise(
-            F.col("logp")
-        ),
-    )
-    rows_t = tampered.collect()
-    spark.createDataFrame(rows_t, tampered.schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(bad)
-    with pytest.raises(ValueError, match="digest"):
-        load_lang_model(spark, bad)
-
-    # truncated model (a label's grid rows dropped): grid check fires
-    trunc = str(tmp_path / "m_trunc")
-    save_lang_model(trained, spark, trunc, char_n=3, portable=True)
-    cut = spark.read.parquet(trunc).filter(
-        ~((F.col("label") == "en") & (F.col("bucket") >= 16))
-    )
-    rows_c = cut.collect()
-    spark.createDataFrame(rows_c, cut.schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(trunc)
-    with pytest.raises(ValueError, match="grid incomplete|digest"):
-        load_lang_model(spark, trunc)
-
-    # classify_lang_nb now has the verdict-form guards (ADVICE-low):
-    # empty model raises ...
-    empty = train_lang_nb(
-        spark.createDataFrame(
-            [(1, "x", None)], "doc_id bigint, text string, lang string"
-        ),
-        "lang",
-        "text",
-        **kw,
-    )
     with pytest.raises(ValueError, match="empty lang_nb model"):
-        classify_lang_nb(df, empty, **kw)
-    # ... and a grid trained at 32 scored at the 64 default raises
-    # instead of silently joining against a mismatched grid
-    with pytest.raises(ValueError, match="grid incomplete"):
-        classify_lang_nb(df, trained)
+        classify_lang_nb(df, model, n_buckets=32)

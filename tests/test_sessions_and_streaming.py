@@ -220,106 +220,6 @@ def test_interval_join_streams_matches_batch(spark, sf_dir, tmp_path_factory):
     assert got == batch
 
 
-def test_streaming_neardup_ingest_matches_batch_and_is_idempotent(
-    spark, tmp_path_factory
-):
-    """Two micro-batches of documents with known within-batch AND
-    cross-batch near-dups: the streaming foreachBatch ingest must
-    accept exactly what the batch-mode incremental pipeline accepts,
-    and draining the stream again with the same checkpoint must not
-    change the accepted set (exactly-once)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from lsdm_motogp_data_integration_spark.streaming import (
-        streaming_neardup_ingest,
-    )
-
-    base = (
-        "the quick brown fox jumps over the lazy dog while the spark "
-        "engine shuffles partitions across the cluster nodes "
-    )
-    alt = (
-        "completely different content about databases indexes vacuum "
-        "analyze planner costs and write ahead logging internals here "
-    )
-    # batch 1 (files sort lexicographically; one file per trigger):
-    #   1,2 near-identical; 3 unique
-    # batch 2: 11 duplicates doc 1 (cross-batch); 12,13 near-identical
-    #   (within-batch); 14 unique
-    b1 = [(1, base * 4), (2, base * 4 + "tail"), (3, alt * 4)]
-    b2 = [
-        (11, base * 4 + "x"),
-        (12, alt * 2 + base * 2),
-        (13, alt * 2 + base * 2 + "y"),
-        (14, "singular text with many unusual rare tokens appearing"),
-    ]
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    src = str(tmp_path_factory.mktemp("docstream"))
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/f1")
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/f2")
-
-    index_dir = str(tmp_path_factory.mktemp("nd_index"))
-    accepted_dir = str(tmp_path_factory.mktemp("nd_accepted"))
-    ckpt = str(tmp_path_factory.mktemp("nd_ckpt"))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
-    streaming_neardup_ingest(
-        stream,
-        index_dir=index_dir,
-        accepted_dir=accepted_dir,
-        checkpoint_dir=ckpt,
-        threshold=0.8,
-    )
-    accepted = {
-        r["doc_id"]
-        for r in spark.read.parquet(accepted_dir).select("doc_id").collect()
-    }
-    # within b1: 1 survives (2 is its near-dup), 3 survives.
-    # within b2: 12 survives (13 near-dup), 14 survives; 11 is a
-    # cross-batch near-dup of accepted 1 -> dropped.
-    assert accepted == {1, 3, 12, 14}
-    # index rows exist only for accepted docs
-    idx_ids = {
-        r["doc_id"]
-        for r in spark.read.parquet(index_dir).select("doc_id").collect()
-    }
-    assert idx_ids == accepted
-
-    # drain again with the same checkpoint: no new batches, same state
-    stream2 = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
-    streaming_neardup_ingest(
-        stream2,
-        index_dir=index_dir,
-        accepted_dir=accepted_dir,
-        checkpoint_dir=ckpt,
-        threshold=0.8,
-    )
-    accepted2 = {
-        r["doc_id"]
-        for r in spark.read.parquet(accepted_dir).select("doc_id").collect()
-    }
-    assert accepted2 == accepted
-
-
 def test_gapfill_hourly_dense_axis_and_locf(spark):
     """Empty interior hours appear with n_events=0; sum_value_ff
     carries the last observed hourly sum across the gap; the axis is
@@ -355,143 +255,6 @@ def test_gapfill_hourly_dense_axis_and_locf(spark):
         assert gap["sum_value_ff"] == 5.0  # carried from 10:00
     assert out[("A", 13)]["sum_value_ff"] == 7.0
     assert out[("B", 22)]["n_events"] == 1
-
-
-def test_streaming_cms_ingest_matches_batch_and_is_idempotent(
-    spark, tmp_path_factory
-):
-    """Per-batch sketch partials must merge (counter addition) to the
-    batch-mode sketch of the full token stream, and re-draining with
-    the same checkpoint must not double-count."""
-    from pyspark.sql import types as T
-
-    from lsdm_motogp_data_integration_spark.operators.sketches import (
-        count_min_sketch,
-    )
-    from lsdm_motogp_data_integration_spark.streaming import (
-        read_cms_sketch,
-        streaming_cms_ingest,
-    )
-
-    schema = T.StructType([T.StructField("term", T.StringType())])
-    b1 = [("spark",)] * 5 + [("shuffle",)] * 2
-    b2 = [("spark",)] * 3 + [("window",)] * 4
-    src = str(tmp_path_factory.mktemp("termstream"))
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/f1")
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/f2")
-
-    sketch_dir = str(tmp_path_factory.mktemp("cms_sketch"))
-    ckpt = str(tmp_path_factory.mktemp("cms_ckpt"))
-
-    def drain():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-        )
-        streaming_cms_ingest(
-            stream, sketch_dir=sketch_dir, checkpoint_dir=ckpt,
-            width=64, depth=3,
-        )
-
-    drain()
-    merged = read_cms_sketch(spark, sketch_dir)
-    whole = count_min_sketch(
-        spark.createDataFrame(b1 + b2, schema), "term", width=64, depth=3
-    )
-    sym = merged.exceptAll(whole).count() + whole.exceptAll(merged).count()
-    assert sym == 0
-
-    # idempotence: draining again (no new files) changes nothing
-    drain()
-    again = read_cms_sketch(spark, sketch_dir)
-    sym2 = again.exceptAll(whole).count() + whole.exceptAll(again).count()
-    assert sym2 == 0
-
-
-def test_streaming_hll_ingest_matches_batch_and_is_idempotent(
-    spark, tmp_path_factory
-):
-    """Per-batch HLL register partials must MAX-merge to the batch-mode
-    sketch of the full stream (the HLL merge property made operational)
-    and re-draining with the same checkpoint must not move registers."""
-    from pyspark.sql import types as T
-
-    from lsdm_motogp_data_integration_spark.operators.sketches import (
-        hll_estimate,
-        hll_sketch,
-    )
-    from lsdm_motogp_data_integration_spark.streaming import (
-        read_hll_sketch,
-        streaming_hll_ingest,
-    )
-
-    schema = T.StructType([T.StructField("term", T.StringType())])
-    b1 = [(f"u{i}",) for i in range(40)]
-    b2 = [(f"u{i}",) for i in range(20, 60)]  # overlaps b1
-    src = str(tmp_path_factory.mktemp("hllstream"))
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/f1")
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/f2")
-
-    sketch_dir = str(tmp_path_factory.mktemp("hll_sketch"))
-    ckpt = str(tmp_path_factory.mktemp("hll_ckpt"))
-
-    def drain():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-        )
-        streaming_hll_ingest(
-            stream, sketch_dir=sketch_dir, checkpoint_dir=ckpt, m=64
-        )
-
-    drain()
-    merged = read_hll_sketch(spark, sketch_dir)
-    whole = hll_sketch(spark.createDataFrame(b1 + b2, schema), "term", m=64)
-    sym = merged.exceptAll(whole).count() + whole.exceptAll(merged).count()
-    assert sym == 0
-    # the live estimate sees 60 distinct terms (overlap NOT
-    # double-counted — registers are max, not sum)
-    est = hll_estimate(merged, m=64).first()["hll_est"]
-    assert abs(est - 60) / 60 < 0.40
-
-    drain()  # idempotence
-    again = read_hll_sketch(spark, sketch_dir)
-    sym2 = again.exceptAll(whole).count() + whole.exceptAll(again).count()
-    assert sym2 == 0
-
-
-def test_read_hll_sketch_empty_state(spark, tmp_path):
-    """Missing/empty HLL dir yields the empty register relation."""
-    from lsdm_motogp_data_integration_spark.streaming import (
-        read_hll_sketch,
-    )
-
-    out = read_hll_sketch(spark, str(tmp_path / "never_written"))
-    assert out.columns == ["idx", "reg"]
-    assert out.count() == 0
-
-
-def test_read_cms_sketch_empty_state(spark, tmp_path):
-    """Missing/empty sketch dir yields the empty sketch, not a crash."""
-    from lsdm_motogp_data_integration_spark.streaming import (
-        read_cms_sketch,
-    )
-
-    out = read_cms_sketch(spark, str(tmp_path / "never_written"))
-    assert out.columns == ["row", "bucket", "cnt"]
-    assert out.count() == 0
 
 
 # ---------------------------------------------------------------------------
@@ -597,631 +360,3 @@ def test_hopping_window_each_event_in_two_windows(spark):
         for r in out.collect()
     )
     assert got == [(9, 1, 2.5), (10, 1, 2.5)]
-
-
-def test_streaming_histogram_ingest_matches_batch_and_quantiles(
-    spark, tmp_path_factory
-):
-    """Histogram partials must counter-add to the batch-mode sketch of
-    the full stream, and the merged state must feed histogram_quantile
-    with the documented one-bin accuracy."""
-    from pyspark.sql import types as T
-
-    from lsdm_motogp_data_integration_spark.operators.sketches import (
-        histogram_quantile,
-        histogram_sketch,
-    )
-    from lsdm_motogp_data_integration_spark.streaming import (
-        read_histogram_sketch,
-        streaming_histogram_ingest,
-    )
-
-    schema = T.StructType([T.StructField("value", T.DoubleType())])
-    b1 = [(float(i),) for i in range(0, 500, 2)]
-    b2 = [(float(i),) for i in range(1, 500, 2)]
-    src = str(tmp_path_factory.mktemp("histstream"))
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/f1")
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/f2")
-    sketch_dir = str(tmp_path_factory.mktemp("hist_sketch"))
-    ckpt = str(tmp_path_factory.mktemp("hist_ckpt"))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
-    streaming_histogram_ingest(
-        stream, sketch_dir=sketch_dir, checkpoint_dir=ckpt,
-        lo=0.0, hi=500.0, n_bins=50,
-    )
-    merged = read_histogram_sketch(spark, sketch_dir)
-    whole = histogram_sketch(
-        spark.createDataFrame(b1 + b2, schema), "value",
-        lo=0.0, hi=500.0, n_bins=50,
-    )
-    sym = merged.exceptAll(whole).count() + whole.exceptAll(merged).count()
-    assert sym == 0
-    est = {
-        r["q"]: r["qvalue"]
-        for r in histogram_quantile(
-            merged, [0.5], lo=0.0, hi=500.0, n_bins=50
-        ).collect()
-    }
-    # exact median of 0..499 is 250-ish; one 10-wide bin of slack
-    assert 240.0 <= est[0.5] <= 260.0
-
-
-def test_streaming_ivf_ingest_matches_batch_index(spark, tmp_path_factory):
-    """streaming_ivf_ingest (r4): two micro-batches of vectors
-    appended to a batch_id=N/cell=K index must serve results identical
-    to a one-shot build_ivf_index over the same vectors, and a replay
-    with the same checkpoint must not change the index (exactly-once
-    via per-batch directory overwrite)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from lsdm_motogp_data_integration_spark.operators.ann import (
-        _train_centroids,
-        build_ivf_index,
-        ivf_topk_from_index,
-        save_codebook,
-    )
-    from lsdm_motogp_data_integration_spark.sources import read_table
-    from lsdm_motogp_data_integration_spark.streaming import (
-        streaming_ivf_ingest,
-    )
-
-    e = read_table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", "embedding"
-    )
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    mat = _train_centroids(e, "embedding", "vec_id", 8, 2, None)
-    cb = str(tmp_path_factory.mktemp("sivf") / "cb")
-    save_codebook(mat, spark, cb)
-
-    src = str(tmp_path_factory.mktemp("sivf_src"))
-    e.filter(F.col("vec_id") % 2 == 0).coalesce(1).write.parquet(
-        f"{src}/f1"
-    )
-    e.filter(F.col("vec_id") % 2 == 1).coalesce(1).write.parquet(
-        f"{src}/f2"
-    )
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField(
-                "embedding", T.ArrayType(T.DoubleType())
-            ),
-        ]
-    )
-    # match on-disk physical type: read one file's schema instead
-    schema = spark.read.parquet(f"{src}/f1").schema
-    idx = str(tmp_path_factory.mktemp("sivf_idx"))
-    ckpt = str(tmp_path_factory.mktemp("sivf_ckpt"))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
-    streaming_ivf_ingest(
-        stream, index_dir=idx, checkpoint_dir=ckpt, codebook=cb
-    )
-
-    oneshot = str(tmp_path_factory.mktemp("sivf_oneshot"))
-    build_ivf_index(e, "embedding", "vec_id", path=oneshot, codebook=cb)
-
-    kw = dict(codebook=cb, k=5, nprobe=3)
-    served_stream = sorted(map(tuple, ivf_topk_from_index(
-        spark, idx, q, "embedding", "vec_id", "query_id", "query_vec",
-        **kw,
-    ).collect()))
-    served_batch = sorted(map(tuple, ivf_topk_from_index(
-        spark, oneshot, q, "embedding", "vec_id", "query_id",
-        "query_vec", **kw,
-    ).collect()))
-    assert served_stream == served_batch and len(served_stream) == 25
-
-    # replay: same checkpoint, no new input -> index unchanged
-    n_before = spark.read.parquet(idx).count()
-    stream2 = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
-    streaming_ivf_ingest(
-        stream2, index_dir=idx, checkpoint_dir=ckpt, codebook=cb
-    )
-    assert spark.read.parquet(idx).count() == n_before
-
-
-def test_streaming_pq_ingest_matches_batch_index(spark, tmp_path_factory):
-    """streaming_pq_ingest (r4): per-batch encoded codes must serve
-    ADC results identical to a one-shot build_pq_index; replay with
-    the same checkpoint leaves the tree unchanged."""
-    from pyspark.sql import functions as F
-
-    from lsdm_motogp_data_integration_spark.operators.ann import (
-        _pq_fit,
-        build_pq_index,
-        pq_topk_from_index,
-        save_codebook,
-    )
-    from lsdm_motogp_data_integration_spark.sources import read_table
-    from lsdm_motogp_data_integration_spark.streaming import (
-        streaming_pq_ingest,
-    )
-
-    e = read_table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", "embedding"
-    )
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    books, _ = _pq_fit(e, "embedding", "vec_id", 4, 8, 2, None)
-    cb = str(tmp_path_factory.mktemp("spq") / "cb")
-    save_codebook(books, spark, cb)
-
-    src = str(tmp_path_factory.mktemp("spq_src"))
-    e.filter(F.col("vec_id") % 2 == 0).coalesce(1).write.parquet(
-        f"{src}/f1"
-    )
-    e.filter(F.col("vec_id") % 2 == 1).coalesce(1).write.parquet(
-        f"{src}/f2"
-    )
-    schema = spark.read.parquet(f"{src}/f1").schema
-    idx = str(tmp_path_factory.mktemp("spq_idx"))
-    ckpt = str(tmp_path_factory.mktemp("spq_ckpt"))
-
-    def drain():
-        streaming_pq_ingest(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src),
-            index_dir=idx, checkpoint_dir=ckpt, codebooks=cb,
-        )
-
-    drain()
-    oneshot = str(tmp_path_factory.mktemp("spq_oneshot"))
-    build_pq_index(e, "embedding", "vec_id", path=oneshot, codebooks=cb)
-    kw = dict(codebooks=cb, k=5)
-    a = sorted(map(tuple, pq_topk_from_index(
-        spark, idx, q, "vec_id", "query_id", "query_vec", **kw
-    ).collect()))
-    b = sorted(map(tuple, pq_topk_from_index(
-        spark, oneshot, q, "vec_id", "query_id", "query_vec", **kw
-    ).collect()))
-    assert a == b and len(a) == 25
-
-    n = spark.read.parquet(idx).count()
-    drain()
-    assert spark.read.parquet(idx).count() == n
-
-
-def test_streaming_lang_model_ingest_matches_batch(
-    spark, tmp_path_factory
-):
-    """Continuous NB training (r5): per-batch count partials merged by
-    addition + the shared finishing math must equal one-shot
-    train_lang_nb over the full corpus BIT-FOR-BIT; replay is
-    idempotent; resuming under different hash params raises; the
-    finisher refuses before the first partial lands."""
-    import pytest
-    from pyspark.sql import types as T
-
-    from lsdm_motogp_data_integration_spark.operators.scoring import (
-        classify_lang_nb,
-        train_lang_nb,
-    )
-    from lsdm_motogp_data_integration_spark.streaming import (
-        lang_model_from_partials,
-        streaming_lang_model_ingest,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-        ]
-    )
-    b1 = [
-        (1, "the cat sat on the mat and the dog ran through a field", "en"),
-        (2, "a informação chegou à estação e a decisão não foi fácil", "pt"),
-    ]
-    b2 = [
-        (3, "la información llegó a la estación y la decisión fue clara", "es"),
-        (4, "as ações da nação são uma questão de atenção e conexão", "pt"),
-    ]
-    src = str(tmp_path_factory.mktemp("lmstream"))
-    for i, rows in enumerate((b1, b2)):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            f"{src}/f{i}"
-        )
-    partials = str(tmp_path_factory.mktemp("lm_partials"))
-    ckpt = str(tmp_path_factory.mktemp("lm_ckpt"))
-    kw = dict(n_buckets=32, char_n=3, portable=True)
-
-    def drain(**over):
-        streaming_lang_model_ingest(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src),
-            partials_dir=partials,
-            checkpoint_dir=ckpt,
-            label_col="lang",
-            **{**kw, **over},
-        )
-
-    drain()
-    streamed = lang_model_from_partials(spark, partials)
-    assert (streamed.n_buckets, streamed.char_n, streamed.portable) == (
-        32, 3, True,
-    )
-    batch_model = sorted(
-        map(
-            tuple,
-            train_lang_nb(
-                spark.createDataFrame(b1 + b2, schema), "lang", "text", **kw
-            ).collect(),
-        )
-    )
-    assert sorted(map(tuple, streamed.rows)) == batch_model
-
-    # replay idempotence: re-drain with the same checkpoint, model
-    # unchanged (a double-counted partial would shift every logp)
-    drain()
-    again = lang_model_from_partials(spark, partials)
-    assert sorted(map(tuple, again.rows)) == batch_model
-
-    # the streamed model serves directly (params travel with it)
-    docs = spark.createDataFrame(b1 + b2, schema).drop("lang")
-    got = {
-        r["doc_id"]: r["lang_nb"]
-        for r in classify_lang_nb(docs, streamed).collect()
-    }
-    assert got[2] == "pt" and got[3] == "es"
-
-    # resume under different params: refused before any write
-    with pytest.raises(ValueError, match="corrupt"):
-        drain(char_n=2)
-
-    # a fresh partials dir with no batches: the finisher refuses
-    empty = str(tmp_path_factory.mktemp("lm_empty"))
-    with pytest.raises(ValueError, match="sidecar"):
-        lang_model_from_partials(spark, empty)
-
-
-def test_lang_model_drift_two_batch_report(spark, tmp_path_factory):
-    """Drift telemetry for continuous NB training (r6; VERDICT r5
-    next-round #8): snapshot the model after each micro-batch and the
-    report must name what changed — a label the new batch introduced
-    ('added'), the prior mass it took from the incumbents
-    (prior_delta < 0), and within-label gram drift when a kept label
-    saw new text. Param-mismatched models refuse to compare."""
-    import pytest
-    from pyspark.sql import types as T
-
-    from lsdm_motogp_data_integration_spark.operators.scoring import (
-        train_lang_nb,
-    )
-    from lsdm_motogp_data_integration_spark.streaming import (
-        lang_model_drift,
-        lang_model_from_partials,
-        streaming_lang_model_ingest,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-        ]
-    )
-    b1 = [
-        (1, "the cat sat on the mat and the dog ran through a field", "en"),
-        (2, "the house of the hill is with the old oak and the barn", "en"),
-        (3, "a informação chegou à estação e a decisão não foi fácil", "pt"),
-    ]
-    b2 = [
-        (4, "la información llegó a la estación y la decisión fue clara", "es"),
-        (5, "as ações da nação são uma questão de atenção e conexão", "pt"),
-    ]
-    src = str(tmp_path_factory.mktemp("lmdrift_src"))
-    partials = str(tmp_path_factory.mktemp("lmdrift_partials"))
-    ckpt = str(tmp_path_factory.mktemp("lmdrift_ckpt"))
-    kw = dict(n_buckets=32, char_n=3, portable=True)
-
-    def drain():
-        streaming_lang_model_ingest(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src),
-            partials_dir=partials,
-            checkpoint_dir=ckpt,
-            label_col="lang",
-            **kw,
-        )
-
-    spark.createDataFrame(b1, schema).coalesce(1).write.parquet(f"{src}/f0")
-    drain()
-    model_a = lang_model_from_partials(spark, partials)
-    spark.createDataFrame(b2, schema).coalesce(1).write.parquet(f"{src}/f1")
-    drain()
-    model_b = lang_model_from_partials(spark, partials)
-
-    rep = {
-        r["label"]: r
-        for r in lang_model_drift(spark, model_a, model_b).collect()
-    }
-    assert {lb: r["status"] for lb, r in rep.items()} == {
-        "en": "kept", "pt": "kept", "es": "added",
-    }
-    # es appeared in batch 2: no prior_a, a real prior_b, no gram_l1
-    assert rep["es"]["prior_a"] is None
-    assert rep["es"]["prior_b"] == pytest.approx(1 / 5, abs=1e-4)
-    assert rep["es"]["gram_l1"] is None
-    # en lost prior mass to the new arrivals (2/3 -> 2/5) ...
-    assert rep["en"]["prior_delta"] < 0
-    assert rep["en"]["prior_a"] == pytest.approx(2 / 3, abs=1e-4)
-    assert rep["en"]["prior_b"] == pytest.approx(2 / 5, abs=1e-4)
-    # ... and saw NO new text: zero within-label gram drift, while pt
-    # (one new doc with fresh grams) drifted
-    assert rep["en"]["gram_l1"] == pytest.approx(0.0, abs=1e-6)
-    assert rep["pt"]["gram_l1"] > 0.01
-
-    # the report equals drift(one-shot(b1), one-shot(b1+b2)) — the
-    # stream==batch count property carried through the telemetry
-    a1 = train_lang_nb(spark.createDataFrame(b1, schema), "lang", "text", **kw)
-    a2 = train_lang_nb(
-        spark.createDataFrame(b1 + b2, schema), "lang", "text", **kw
-    )
-    rep2 = sorted(
-        map(tuple, lang_model_drift(spark, a1, a2).collect())
-    )
-    assert rep2 == sorted(map(tuple, lang_model_drift(
-        spark, model_a, model_b
-    ).collect()))
-
-    # param-mismatched models refuse to compare
-    other = train_lang_nb(
-        spark.createDataFrame(b1, schema), "lang", "text",
-        n_buckets=64, char_n=3,
-    )
-    from lsdm_motogp_data_integration_spark.operators.scoring import (
-        LangNBModel,
-    )
-
-    other_m = LangNBModel(other.collect(), 64, 3, False)
-    with pytest.raises(ValueError, match="feature spaces"):
-        lang_model_drift(spark, model_a, other_m)
-
-
-def test_streaming_neardup_index_params_sidecar(spark, tmp_path_factory):
-    """MinHash-index params sidecar (r5): index rows are a pure
-    function of (text, k, num_perm, bands, unit) — resuming the
-    ingest under different signature params is refused (mixed
-    signatures silently stop catching near-dups), same params resume
-    fine, and the sidecar is invisible to the parquet index scan."""
-    import pytest
-    from pyspark.sql import types as T
-
-    from lsdm_motogp_data_integration_spark.streaming import (
-        streaming_neardup_ingest,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    base = (
-        "the quick brown fox jumps over the lazy dog while the spark "
-        "engine shuffles partitions across the cluster nodes "
-    )
-    src = str(tmp_path_factory.mktemp("sidecar_src"))
-    spark.createDataFrame(
-        [(1, base * 4), (2, base * 4 + "tail")], schema
-    ).coalesce(1).write.parquet(f"{src}/f1")
-    index = str(tmp_path_factory.mktemp("sidecar_idx"))
-    accepted = str(tmp_path_factory.mktemp("sidecar_acc"))
-    ckpt = str(tmp_path_factory.mktemp("sidecar_ckpt"))
-
-    def drain(**over):
-        kw = dict(k=5, num_perm=32, bands=16, unit="word")
-        kw.update(over)
-        streaming_neardup_ingest(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src),
-            index_dir=index,
-            accepted_dir=accepted,
-            checkpoint_dir=ckpt,
-            **kw,
-        )
-
-    drain()
-    assert {r["doc_id"] for r in spark.read.parquet(accepted).collect()} == {1}
-    # the sidecar is invisible to the index scan
-    assert set(spark.read.parquet(index).columns) >= {"doc_id", "__bucket"}
-
-    drain()  # same params: resume is fine (and idempotent)
-
-    for bad in (dict(unit="char", k=8), dict(num_perm=16, bands=8),
-                dict(k=3)):
-        with pytest.raises(ValueError, match="near-dups"):
-            drain(**bad)
-
-
-def test_streaming_post_mark_null_coalesces_to_kept(
-    spark, tmp_path_factory
-):
-    """ADVICE r5: a user post_mark whose predicate yields NULL (e.g.
-    `F.when(cond, True)` with no otherwise — classic three-valued
-    logic) must not silently exclude the row: the ~excluded shard
-    filter and every downstream NOT-excluded consumer treat NULL as
-    excluded. The ingest now coalesces the marker to false (the
-    keep-by-default convention of the built-in strict_decontam
-    marker)."""
-    from pyspark.sql import types as T
-
-    from lsdm_motogp_data_integration_spark.streaming import (
-        streaming_neardup_ingest,
-    )
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy sleeping dog today"),
-        (2, "a completely different second document about rivers and stones"),
-        (3, "this third document mentions banthis and gets flagged properly"),
-    ]
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    src = str(tmp_path_factory.mktemp("pm_src"))
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-        f"{src}/f0"
-    )
-    accepted = str(tmp_path_factory.mktemp("pm_acc"))
-    shards = str(tmp_path_factory.mktemp("pm_sh"))
-
-    def post_mark(df):
-        # True for doc 3, NULL (not False!) for everyone else
-        return df.withColumn(
-            "excluded",
-            F.when(F.col("text").contains("banthis"), F.lit(True)),
-        )
-
-    streaming_neardup_ingest(
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(src),
-        index_dir=str(tmp_path_factory.mktemp("pm_idx")),
-        accepted_dir=accepted,
-        checkpoint_dir=str(tmp_path_factory.mktemp("pm_ck")),
-        shards_dir=shards,
-        n_shards=2,
-        post_mark=post_mark,
-    )
-    acc = spark.read.parquet(accepted)
-    flags = {r["doc_id"]: r["excluded"] for r in acc.collect()}
-    # no NULL markers survive the ingest ...
-    assert flags == {1: False, 2: False, 3: True}
-    # ... so the NOT-excluded corpus and the shard export keep 1 and 2
-    assert {
-        r["doc_id"] for r in acc.filter(~F.col("excluded")).collect()
-    } == {1, 2}
-    sharded = {
-        r["doc_id"] for r in spark.read.parquet(shards).collect()
-    }
-    assert sharded == {1, 2}
-
-
-def test_streaming_dhash_ingest_perceptual_index(
-    spark, tmp_path_factory
-):
-    """Streaming perceptual image dedup (r6): the dHash maintainer
-    must (a) self-dedup within a batch keeping the lowest media_id,
-    (b) screen later batches against the persisted index — a
-    re-encoded PNG twin and an NN-resized twin of an accepted image
-    are both rejected, a genuinely different image is admitted,
-    (c) replay idempotently, and (d) refuse to resume under different
-    hash params."""
-    import numpy as np
-    import pytest
-
-    from lsdm_motogp_data_integration_spark.operators import (
-        mediacodec as mc,
-    )
-    from lsdm_motogp_data_integration_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        _nn_resize,
-    )
-    from lsdm_motogp_data_integration_spark.streaming import (
-        read_dhash_index,
-        streaming_dhash_ingest,
-    )
-
-    base = (np.add.outer(np.arange(24) * 8, np.arange(28) * 4) % 256).astype(
-        np.uint8
-    )
-    img_a = np.stack(
-        [base, 255 - base, (base.astype(int) * 2 % 256).astype(np.uint8)],
-        axis=2,
-    )
-    img_b = np.flip(img_a, axis=1).copy()  # mirrored: distinct
-    # NB a VERTICAL flip would NOT be distinct under dHash — the bits
-    # compare horizontal neighbors only, and flipping rows preserves
-    # every horizontal gradient sign (hashes ~identical). Noise is
-    # unambiguous (measured 35/27 bits from img_a/img_b).
-    img_c = np.random.RandomState(9).randint(
-        0, 256, (24, 28, 3), dtype=np.uint8
-    )
-    b1 = [
-        (1, "image", mc.encode_bmp(img_a), None),
-        (2, "image", mc.encode_bmp(img_a), None),  # in-batch twin of 1
-        (3, "image", mc.encode_bmp(img_b), None),
-    ]
-    b2 = [
-        # re-encoded twin of accepted 1: rejected by the history screen
-        (10, "image", mc.encode_png(
-            img_a, filters=[y % 5 for y in range(24)]
-        ), None),
-        (11, "image", mc.encode_bmp(img_c), None),  # genuinely new
-    ]
-    b3 = [
-        # NN-resized twin of accepted 1: rejected
-        (20, "image", mc.encode_ppm(_nn_resize(img_a, 14, 12)), None),
-    ]
-    src = str(tmp_path_factory.mktemp("dh_src"))
-    for i, rows in enumerate((b1, b2, b3)):
-        spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(1).write.parquet(
-            f"{src}/f{i}"
-        )
-    index = str(tmp_path_factory.mktemp("dh_idx"))
-    ckpt = str(tmp_path_factory.mktemp("dh_ck"))
-
-    def drain(**over):
-        streaming_dhash_ingest(
-            spark.readStream.schema(MEDIA_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src),
-            index_dir=index,
-            checkpoint_dir=ckpt,
-            **{"max_hamming": 10, **over},
-        )
-
-    drain()
-    idx, meta = read_dhash_index(spark, index)
-    accepted = {r["media_id"] for r in idx.collect()}
-    assert accepted == {1, 3, 11}
-    assert meta["hash_w"] == 8 and meta["max_hamming"] == 10
-
-    # replay idempotence: same checkpoint, nothing new, index unchanged
-    drain()
-    again = {r["media_id"] for r in read_dhash_index(spark, index)[0].collect()}
-    assert again == accepted
-
-    # resume under a different radius/grid: refused (different
-    # accepted-set semantics)
-    with pytest.raises(ValueError, match="semantics"):
-        drain(max_hamming=6)
-    with pytest.raises(ValueError, match="semantics"):
-        drain(hash_w=4)

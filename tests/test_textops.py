@@ -670,14 +670,18 @@ def test_badword_screen_whole_word_case_insensitive(spark):
 
 
 def test_curate_badwords_stage_drops_hit_pages(spark, sf_dir):
+    """badword_keep as a screen over real documents: exactly the pages
+    carrying the planted term are dropped."""
     from pyspark.sql import functions as F
 
-    from lsdm_motogp_data_integration_spark.pipelines.curation import curate
+    from lsdm_motogp_data_integration_spark.operators.textops import (
+        badword_screen,
+    )
     from lsdm_motogp_data_integration_spark.sources import read_table
 
     d = (
         read_table(spark, sf_dir, "documents")
-        .select("doc_id", "text", "source")
+        .select("doc_id", "text")
         .limit(100)
         .withColumn(
             "text",
@@ -687,9 +691,10 @@ def test_curate_badwords_stage_drops_hit_pages(spark, sf_dir):
             ).otherwise(F.col("text")),
         )
     )
-    out = curate(d, badwords=("zzzbadterm",))
-    ids = {r["doc_id"] for r in out["screened"].select("doc_id").collect()}
-    assert ids and not any(i % 4 == 0 for i in ids)
+    all_ids = {r["doc_id"] for r in d.select("doc_id").collect()}
+    kept = d.filter(badword_screen("text", ("zzzbadterm",))["badword_keep"])
+    ids = {r["doc_id"] for r in kept.select("doc_id").collect()}
+    assert ids and ids == {i for i in all_ids if i % 4 != 0}
 
 
 def test_token_budget_sample_meets_budget_and_is_deterministic(spark):

@@ -1,11 +1,12 @@
 """Capture .explain("formatted") output for headline queries into
-plans/<tag>/<query>_<suffix>.txt (optimization-round evidence).
+<dir>/<query>_<suffix>.txt (optimization-round evidence).
 
 Usage: python tools/capture_plans.py <suffix> [query ...]
   suffix: "before" / "after" (file name suffix)
   query:  optional subset; defaults to every bench.HEADLINE query.
   $SPARK_GRAFT_PLANS_DIR overrides the output directory (default
-  plans/r10 — bump per optimization round).
+  spark_graft_plans under the system temp dir, outside the tree:
+  PLANS.md and tests/plan_fingerprints.json are the kept record).
 
 The formatted plan is the pre-execution plan (AdaptiveSparkPlan
 isFinalPlan=false) — exactly what `df.explain("formatted")` prints.
@@ -15,6 +16,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -28,9 +30,7 @@ def main() -> None:
     names = sys.argv[2:] or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.environ.get("SPARK_GRAFT_PLANS_DIR") or os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r10",
+        tempfile.gettempdir(), "spark_graft_plans"
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("capture_plans")
