@@ -17,46 +17,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import __spark_entry__ as entry_mod
+from lsdm_motogp_data_integration_spark.queries import registry
 from lsdm_motogp_data_integration_spark.session import get_spark
-
-HEADLINE = [
-    "q01_pricing_summary",
-    "q05_join_suite",
-    "q09_position_counts_multiway",
-    "q11_standings",
-    "q13_surrogate_key",
-    "q17_fuzzy_best_match",
-    "q19_neardup_pairs_suite",
-    "q21_simhash_neardup",
-    "q26_ann_suite",
-    "q27_embedding_neardup",
-    "q28_event_time_suite",
-    "q30_topk_per_group",
-    "q36_asof_join",
-    "q38_grouped_zscore",
-    "q63_boilerplate_lines",
-    "q64_bm25",
-    "q67_span_dedup",
-]
-def _scope_values(name: str, tag: str) -> list[str]:
-    """Scope literals of a suite, extracted from its oracle SQL (the
-    oracle is the source of truth for what a suite contains);
-    tools/registry_doc.py lists the same scopes in REGISTRY.md."""
-    sql = entry_mod.oracle_sql().get(name, "")
-    found = set(
-        re.findall(
-            r"SELECT\s+(?:DISTINCT\s+)?'([^']+)'\s+AS\s+" + tag, sql
-        )
-    )
-    found |= set(
-        re.findall(
-            r"UNION ALL\s*(?:--[^\n]*\n\s*)*SELECT\s+'(\w+)'\s*,(?!\s*')",
-            sql,
-        )
-    )
-    return sorted(x for x in found if not x.startswith("__"))
-
 
 # q57/q66 (bloom decontamination, DSIR) are driver-checked for
 # correctness and scale-probed in SCALE.md (0.14 / 0.31 time-over-data at
@@ -127,7 +89,6 @@ def main() -> None:
         jaro_winkler_udf(F.lit("a"), F.lit("b"))
     ).count()
 
-    queries = entry_mod.queries()
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
@@ -137,8 +98,8 @@ def main() -> None:
     cpu_ref_q: dict[str, float] = {}
     load_samples: list[tuple[float, float, float]] = []
     load_samples.append(os.getloadavg())
-    for name in HEADLINE:
-        fn = queries[name]
+    for q in registry.headline():
+        name, fn = q.name, q.fn
         runs = []
         # four runs per query: run 1 pays plan analysis + codegen
         # compile, later runs are the steady state a repeated workload
@@ -162,8 +123,7 @@ def main() -> None:
         # scope's own subplan. Sum over scopes can exceed the suite
         # time (shared intermediates re-counted) — these attribute
         # drift to a scope; the suite min stays the headline number.
-        tag = getattr(entry_mod, "_SUITE_TAG_COLS", {}).get(name)
-        scopes = _scope_values(name, tag) if tag else []
+        tag, scopes = q.tag, q.scopes
         if scopes:
             # build the suite ONCE (some suites train models eagerly at
             # plan-build; rebuilding per scope would re-train), then

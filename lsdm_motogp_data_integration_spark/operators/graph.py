@@ -219,7 +219,6 @@ def triangle_counts(
     u_col: str = "u",
     v_col: str = "v",
     persist_edges: bool = True,
-    _persist_handles: list | None = None,
 ) -> DataFrame:
     """Per-node triangle participation counts ``(node, n_triangles)``
     over a canonical undirected edge set — the clustering-coefficient
@@ -250,17 +249,11 @@ def triangle_counts(
         # relation twice — without pinning, each reference replays
         # the upstream canonicalization shuffle (20× probe: 0.49
         # time÷data knee came from exactly this; 0.16 with it).
-        # Caller owns the lifetime: pass _persist_handles to receive
-        # the cached frames and unpersist them when done (the
-        # jaccard_pairs convention), else they live for the session.
+        # Both cached frames live for the session.
         canon = canon.persist()
-        if _persist_handles is not None:
-            _persist_handles.append(canon)
     deg = degrees(canon)
     if persist_edges:
         deg = deg.persist()
-        if _persist_handles is not None:
-            _persist_handles.append(deg)
     du = deg.select(
         F.col("node").alias("u"), F.col("degree").alias("du")
     )

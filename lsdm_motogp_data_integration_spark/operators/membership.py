@@ -213,7 +213,6 @@ def ngram_decontaminate(
     persist_grams: bool = True,
     train_grams: DataFrame | None = None,
     eval_grams: DataFrame | None = None,
-    _persist_handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Train/eval decontamination: per training document, the count of
     distinct word n-grams shared with the eval set →
@@ -240,13 +239,11 @@ def ngram_decontaminate(
     provided, ``train``/``eval_set`` are ignored for that side and the
     caller manages persistence.
 
-    ``_persist_handles``: when a list is passed, any cache this call
-    creates (the distinct eval-gram relation on the bloom path) is
-    appended to it and the CALLER owns the unpersist; when ``None``
-    (the default) the RESULT is eagerly localCheckpoint-ed (one narrow
-    row per contaminated document) while the cache is warm and the
-    cache is then released — nothing leaks into the session, and later
-    actions on the result never re-run the gram explode.
+    When this call caches the distinct eval-gram relation (the bloom
+    path), the RESULT is eagerly localCheckpoint-ed (one narrow row per
+    contaminated document) while the cache is warm and the cache is
+    then released — nothing leaks into the session, and later actions
+    on the result never re-run the gram explode.
     """
     own_eval = eval_grams is None
     if train_grams is None:
@@ -274,18 +271,14 @@ def ngram_decontaminate(
         .agg(F.countDistinct("gram").alias("n_shared_grams"))
     )
     if owned_cache is not None:
-        if _persist_handles is not None:
-            _persist_handles.append(owned_cache)
-        else:
-            # materialize the (per-contaminated-doc narrow) result
-            # while the gram cache is warm, then drop the cache: every
-            # later action on the returned relation reads the
-            # checkpoint instead of re-running the eval explode — the
-            # same closure dsir_log_weights uses (a bare unpersist
-            # here would silently void the persist_grams contract for
-            # multi-action callers)
-            out = out.localCheckpoint(eager=True)
-            owned_cache.unpersist(blocking=False)
+        # materialize the (per-contaminated-doc narrow) result while
+        # the gram cache is warm, then drop the cache: every later
+        # action on the returned relation reads the checkpoint instead
+        # of re-running the eval explode — the same closure
+        # dsir_log_weights uses (a bare unpersist here would silently
+        # void the persist_grams contract for multi-action callers)
+        out = out.localCheckpoint(eager=True)
+        owned_cache.unpersist(blocking=False)
     return out
 
 

@@ -3,7 +3,7 @@
 Okapi BM25 with the Lucene/Robertson idf form
 ``idf(t) = ln(1 + (N - df + 0.5) / (df + 0.5))`` (always positive), the
 natural companion to the engine's TF-IDF / inverted-index operators
-(``__spark_entry__.q49/q50``). The reference has no ranking operator;
+(``queries/text`` q49/q64). The reference has no ranking operator;
 this extends the training-data-curation surface (query-based corpus
 slicing, retrieval-style quality probes).
 

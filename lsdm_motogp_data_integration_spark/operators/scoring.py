@@ -456,7 +456,6 @@ def dsir_log_weights(
     max_n: int = 2,
     portable: bool = False,
     persist_counts: bool = True,
-    _persist_handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): score each raw
@@ -479,12 +478,10 @@ def dsir_log_weights(
     Cache lifecycle: with ``persist_counts=True`` the per-(doc,bucket)
     count relation — the largest intermediate here — is cached so the
     raw-distribution rollup and the scoring join evaluate the explode
-    shuffle once.  When ``_persist_handles`` is a list, the handle is
-    appended and the CALLER owns the unpersist (compose-many pattern);
-    when it is ``None`` (default) the result is eagerly
-    ``localCheckpoint``-ed — one narrow row per scored document, the
-    operator's own output size — and the count cache is released
-    before returning, so nothing leaks into the rest of the session.
+    shuffle once.  The result is then eagerly ``localCheckpoint``-ed —
+    one narrow row per scored document, the operator's own output size
+    — and the count cache is released before returning, so nothing
+    leaks into the rest of the session.
     """
     if not (1 <= max_n <= 4):
         # the slice-per-gram construction copies max_n elements per
@@ -545,14 +542,11 @@ def dsir_log_weights(
         )
     )
     if persist_counts:
-        if _persist_handles is not None:
-            _persist_handles.append(per_doc)
-        else:
-            # materialize the (per-doc narrow) result while the count
-            # cache is warm — both consumers hit the cache in this one
-            # job — then drop the cache so it can't outlive the call
-            out = out.localCheckpoint(eager=True)
-            per_doc.unpersist(blocking=False)
+        # materialize the (per-doc narrow) result while the count
+        # cache is warm — both consumers hit the cache in this one
+        # job — then drop the cache so it can't outlive the call
+        out = out.localCheckpoint(eager=True)
+        per_doc.unpersist(blocking=False)
     return out
 
 

@@ -69,7 +69,7 @@ def gopher_flags(col: Column | str) -> dict[str, Column]:
     The word-count rule (50 ≤ n ≤ 100k) and the repetition rules
     (top-token / top-bigram share) use counts callers already compute
     (:func:`token_count`, the q22 per-term aggregate) — see
-    ``__spark_entry__.q22_text_signals`` for the combined
+    ``queries/text.q22_text_signals`` for the combined
     ``gopher_keep`` verdict.  Ratios are NOT pre-rounded; round at the
     output edge per the float convention."""
     c = _c(col)

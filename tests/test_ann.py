@@ -836,7 +836,7 @@ def test_ann_artifact_cache_content_keyed(spark, tmp_path):
     import os
     import shutil
 
-    import __spark_entry__ as entry
+    from lsdm_motogp_data_integration_spark.queries import ann as ann_queries
 
     src = "/root/testdata/sf0.001"
     copy = str(tmp_path / "sfcopy")
@@ -849,29 +849,29 @@ def test_ann_artifact_cache_content_keyed(spark, tmp_path):
     else:
         shutil.copyfile(os.path.join(src, "embeddings.parquet"), emb)
 
-    k1 = entry._ann_artifact_base(copy)
-    k2 = entry._ann_artifact_base(copy)
+    k1 = ann_queries._ann_artifact_base(copy)
+    k2 = ann_queries._ann_artifact_base(copy)
     assert k1 == k2  # stable for unchanged data
 
     # "regenerate" the testdata in place: same names, same sizes,
     # fresh write timestamp — the fingerprint must change (mtime_ns)
     st = os.stat(emb)
     os.utime(emb, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
-    k3 = entry._ann_artifact_base(copy)
+    k3 = ann_queries._ann_artifact_base(copy)
     assert k3 != k1
 
     # different params → different key
-    old = entry._ANN_CACHE_PARAMS
+    old = ann_queries._ANN_CACHE_PARAMS
     try:
-        entry._ANN_CACHE_PARAMS = old + "|changed"
-        assert entry._ann_artifact_base(copy) != k3
+        ann_queries._ANN_CACHE_PARAMS = old + "|changed"
+        assert ann_queries._ann_artifact_base(copy) != k3
     finally:
-        entry._ANN_CACHE_PARAMS = old
+        ann_queries._ANN_CACHE_PARAMS = old
 
     # end-to-end: q26 over the copy builds artifacts under the new
     # key and the suite still returns the full 8-scope relation —
     # a mutation means REBUILD, not an oracle failure
-    out = entry.q26_ann_suite(spark, copy)
+    out = ann_queries.q26_ann_suite(spark, copy)
     methods = {r["method"] for r in out.select("method").distinct().collect()}
     assert methods == {
         "exact", "lsh", "ivf", "mmr", "pq",

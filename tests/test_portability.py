@@ -155,11 +155,14 @@ def test_kmeans_lloyd_replay_on_generated_vectors(spark):
     """The unrolled-Lloyd DuckDB replay (the q68 oracle machinery) must
     reproduce kmeans_clusters on FRESH random vectors, not just the
     fixture embeddings — guarding the portability claim against
-    fixture luck. Reuses the entry module's _lloyd_ctes/_cell_assign
+    fixture luck. Reuses the ANN family's _lloyd_ctes/_cell_assign
     SQL generators at a different dim/cells/iters configuration."""
-    import __spark_entry__ as entry
     from lsdm_motogp_data_integration_spark.operators.ann import (
         kmeans_clusters,
+    )
+    from lsdm_motogp_data_integration_spark.queries.ann import (
+        _cell_assign,
+        _lloyd_ctes,
     )
 
     rng = np.random.default_rng(21)
@@ -187,8 +190,8 @@ def test_kmeans_lloyd_replay_on_generated_vectors(spark):
         "CAST(embedding AS FLOAT[]) AS embedding FROM emb_pd"
     )
     sql = f"""
-        WITH {entry._lloyd_ctes(iters, cells, dim=dim)},
-        assigned AS {entry._cell_assign(f"c{iters}", "rn = 1")}
+        WITH {_lloyd_ctes(iters, cells, dim=dim)},
+        assigned AS {_cell_assign(f"c{iters}", "rn = 1")}
         SELECT e.vec_id, CAST(a.cell AS BIGINT) AS cluster,
                ROUND(list_dot_product(e.v, k.c)
                      / greatest(sqrt(list_dot_product(e.v, e.v)), 1e-12),

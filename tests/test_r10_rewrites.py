@@ -50,12 +50,14 @@ class TestQ26SharedRanked:
     """q26's _ann_shared_ranked fused pass == the direct operators."""
 
     def test_exact_and_pool_match_cosine_topk(self, spark, ann_corpus):
-        import __spark_entry__ as entry
+        from lsdm_motogp_data_integration_spark.queries.ann import (
+            _ann_shared_ranked,
+        )
         from lsdm_motogp_data_integration_spark.operators.ann import (
             cosine_topk,
         )
 
-        _, queries_df, shared = entry._ann_shared_ranked(ann_corpus)
+        _, queries_df, shared = _ann_shared_ranked(ann_corpus)
         pool_fused = shared.filter(F.col("__rk_all") <= 12).select(
             "query_id", "neighbor_id", "cosine",
             F.col("__rk_all").alias("rank"),
@@ -74,12 +76,14 @@ class TestQ26SharedRanked:
         assert _rows(exact_fused, cols) == _rows(exact_direct, cols)
 
     def test_hard_neg_matches_hard_negatives(self, spark, ann_corpus):
-        import __spark_entry__ as entry
+        from lsdm_motogp_data_integration_spark.queries.ann import (
+            _ann_shared_ranked,
+        )
         from lsdm_motogp_data_integration_spark.operators.ann import (
             hard_negatives,
         )
 
-        _, _, shared = entry._ann_shared_ranked(ann_corpus)
+        _, _, shared = _ann_shared_ranked(ann_corpus)
         hard_fused = shared.filter(
             F.col("__neg") & (F.col("__rk_neg") <= 5)
         ).select(
@@ -94,9 +98,11 @@ class TestQ26SharedRanked:
         assert _rows(hard_fused, cols) == _rows(hard_direct, cols)
 
     def test_rank_types_are_bigint(self, spark, ann_corpus):
-        import __spark_entry__ as entry
+        from lsdm_motogp_data_integration_spark.queries.ann import (
+            _ann_shared_ranked,
+        )
 
-        _, _, shared = entry._ann_shared_ranked(ann_corpus)
+        _, _, shared = _ann_shared_ranked(ann_corpus)
         types = dict(shared.dtypes)
         assert types["__rk_all"] == "bigint"
         assert types["__rk_neg"] == "bigint"

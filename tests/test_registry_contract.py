@@ -10,9 +10,40 @@ query/oracle key pair drift apart.
 
 from __future__ import annotations
 
+import sys
+from pathlib import Path
+
+import pytest
+
 import __spark_entry__ as entry
+from lsdm_motogp_data_integration_spark.queries import registry
+
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT / "tools"))
 
 DRIVER_WINDOW = 50
+
+# bench.py's timed set: renaming or dropping one breaks the bench JSON
+# contract and the plan pins in tests/plan_fingerprints.json
+HEADLINE = [
+    "q01_pricing_summary",
+    "q05_join_suite",
+    "q09_position_counts_multiway",
+    "q11_standings",
+    "q13_surrogate_key",
+    "q17_fuzzy_best_match",
+    "q19_neardup_pairs_suite",
+    "q21_simhash_neardup",
+    "q26_ann_suite",
+    "q27_embedding_neardup",
+    "q28_event_time_suite",
+    "q30_topk_per_group",
+    "q36_asof_join",
+    "q38_grouped_zscore",
+    "q63_boilerplate_lines",
+    "q64_bm25",
+    "q67_span_dedup",
+]
 
 
 def test_registry_is_exactly_the_driver_window():
@@ -22,6 +53,60 @@ def test_registry_is_exactly_the_driver_window():
         f"{DRIVER_WINDOW} — merge same-family queries into a tagged "
         "suite instead of appending"
     )
+
+
+def test_registry_is_sorted_by_name():
+    names = list(entry.queries())
+    assert names == sorted(names) and len(names) == DRIVER_WINDOW
+    assert list(entry.oracle_sql()) == names
+
+
+def test_headline_set_is_pinned():
+    assert [q.name for q in registry.headline()] == HEADLINE
+
+
+def test_duplicate_registration_raises():
+    def q01_pricing_summary(spark, sf_dir):
+        raise AssertionError("never registered")
+
+    with pytest.raises(ValueError, match="already registered"):
+        registry.query(oracle="SELECT 1")(q01_pricing_summary)
+    assert registry.registry()["q01_pricing_summary"].fn is not (
+        q01_pricing_summary
+    )
+
+
+def test_tag_without_oracle_raises():
+    with pytest.raises(ValueError, match="needs an oracle"):
+        registry.query(oracle="", tag="scope")
+
+
+def test_registry_doc_reproduces_registry_md():
+    from registry_doc import render
+
+    assert render() == (ROOT / "REGISTRY.md").read_text()
+
+
+def test_declared_scopes_match_oracle_tags():
+    """Each headline suite's declared ``scopes`` are exactly the tag
+    values its DuckDB oracle emits at sf0.001 (bench.py times one run
+    per declared scope, so a missing scope is never broken down)."""
+    from check_correctness import duck_con
+
+    con = duck_con("/root/testdata/sf0.001")
+    wrong = {}
+    for q in registry.headline():
+        if q.tag is None:
+            continue
+        rows = con.execute(
+            f"SELECT DISTINCT {q.tag} FROM ({q.oracle_sql()})"
+        ).fetchall()
+        emitted = sorted(
+            r[0] for r in rows if not r[0].startswith("__count|")
+        )
+        if list(q.scopes) != emitted:
+            wrong[q.name] = (q.scopes, emitted)
+    assert not wrong, wrong
 
 
 def test_every_query_is_oracle_backed():

@@ -144,9 +144,11 @@ def test_streaming_dedup_within_watermark(spark, sf_dir, tmp_path_factory):
 def test_grouped_zscore_window_equals_pandas_surface(spark, sf_dir):
     """The JVM-window z-score fast path must agree with q38's
     applyInPandas grouped-map surface cell-for-cell."""
-    import __spark_entry__ as entry
     from lsdm_motogp_data_integration_spark.operators.sessions import (
         grouped_zscore_window,
+    )
+    from lsdm_motogp_data_integration_spark.queries.capabilities import (
+        q38_grouped_zscore,
     )
 
     ev = read_table(spark, sf_dir, "events").select(
@@ -160,7 +162,7 @@ def test_grouped_zscore_window_equals_pandas_surface(spark, sf_dir):
     }
     surface = {
         (r["event_id"], r["zscore"])
-        for r in entry.q38_grouped_zscore(spark, sf_dir).collect()
+        for r in q38_grouped_zscore(spark, sf_dir).collect()
     }
     assert fast == surface
 

@@ -132,9 +132,11 @@ def test_q27_plan_has_no_python_eval_and_no_id_self_join(spark, sf_dir):
     keyed on ``vec_id`` (the old assignment-to-corpus join, which the
     pair scan's two sides each repeated). The one ``vec_id``-keyed join
     left is the left-outer attach of the ``dup_of`` marks."""
-    import __spark_entry__ as entry
+    from lsdm_motogp_data_integration_spark.queries.ann import (
+        q27_embedding_neardup,
+    )
 
-    df = entry.q27_embedding_neardup(spark, sf_dir)
+    df = q27_embedding_neardup(spark, sf_dir)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan

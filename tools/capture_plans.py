@@ -3,7 +3,7 @@
 
 Usage: python tools/capture_plans.py <suffix> [query ...]
   suffix: "before" / "after" (file name suffix)
-  query:  optional subset; defaults to every bench.HEADLINE query.
+  query:  optional subset; defaults to every headline query.
   $SPARK_GRAFT_PLANS_DIR overrides the output directory (default
   spark_graft_plans under the system temp dir, outside the tree:
   PLANS.md and tests/plan_fingerprints.json are the kept record).
@@ -20,23 +20,22 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entry_mod
-from bench import HEADLINE
+from lsdm_motogp_data_integration_spark.queries import registry
 from lsdm_motogp_data_integration_spark.session import get_spark
 
 
 def main() -> None:
     suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or HEADLINE
+    names = sys.argv[2:] or [q.name for q in registry.headline()]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.environ.get("SPARK_GRAFT_PLANS_DIR") or os.path.join(
         tempfile.gettempdir(), "spark_graft_plans"
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("capture_plans")
-    qs = entry_mod.queries()
+    qs = registry.registry()
     for name in names:
-        df = qs[name](spark, sf_dir)
+        df = qs[name].fn(spark, sf_dir)
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"

@@ -11,9 +11,8 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
-import __spark_entry__ as entry_mod
-from bench import HEADLINE
 from lsdm_motogp_data_integration_spark.plans import formatted_plan
+from lsdm_motogp_data_integration_spark.queries import registry
 from lsdm_motogp_data_integration_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.1"
@@ -21,7 +20,6 @@ SF_DIR = "/root/testdata/sf0.1"
 
 def main() -> None:
     spark = get_spark("explain_report")
-    queries = entry_mod.queries()
     print("# PLANS — physical plans of the headline queries (sf0.1)")
     print()
     print(
@@ -35,8 +33,8 @@ def main() -> None:
         "brute-force ANN baseline, q26) — never as an accidental\n"
         "fallback for an equi-joinable predicate."
     )
-    for name in HEADLINE:
-        fn = queries[name]
+    for q in registry.headline():
+        name, fn = q.name, q.fn
         doc = (fn.__doc__ or "").strip().split("\n")[0]
         print(f"\n## {name}\n\n{doc}\n")
         print("```")

@@ -82,22 +82,27 @@ def fingerprint(df) -> tuple[str, str]:
     same query fingerprints differently depending on what was built
     earlier in the session (observed: 7 suites flapping when the pin
     test ran after other plan tests). Clearing pins the CACHE-FREE
-    plan, the one identity that is reproducible in any session."""
-    df.sparkSession.catalog.clearCache()
-    raw = df._jdf.queryExecution().optimizedPlan().toString()
+    plan, the one identity that is reproducible in any session. The
+    plan is re-analyzed from the frame's logical plan, because the
+    frame's own query execution may have been planned already, with
+    cached relations substituted in."""
+    spark = df.sparkSession
+    spark.catalog.clearCache()
+    fresh = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.queryExecution().logical()
+    )
+    raw = fresh.queryExecution().optimizedPlan().toString()
     norm = normalize(raw)
     return hashlib.sha256(norm.encode()).hexdigest()[:16], norm
 
 
 def compute_all(spark) -> dict[str, str]:
-    import __spark_entry__ as entry_mod
-    from bench import HEADLINE
+    from lsdm_motogp_data_integration_spark.queries import registry
 
-    queries = entry_mod.queries()
-    out: dict[str, str] = {}
-    for name in HEADLINE:
-        out[name], _ = fingerprint(queries[name](spark, SF_DIR))
-    return out
+    return {
+        q.name: fingerprint(q.fn(spark, SF_DIR))[0]
+        for q in registry.headline()
+    }
 
 
 def main() -> int:

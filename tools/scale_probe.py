@@ -286,7 +286,9 @@ def main() -> None:
         # real multimodal decode: one BMP per doc (md5-chain pixels,
         # same builder as q41) through media_stats — Arrow-batched
         # mapInPandas build + decode, expected linear
-        from __spark_entry__ import _build_multimodal_media
+        from lsdm_motogp_data_integration_spark.queries.multimodal import (
+            _build_multimodal_media,
+        )
         from lsdm_motogp_data_integration_spark.operators.multimodal import (
             media_stats,
         )
