@@ -6,10 +6,10 @@ family modules of this package, registered under its own name together
 with its DuckDB twin::
 
     @query(
-        oracle="SELECT ...",     # or a zero-argument function returning it
-        tag="scope",               # suites only: the tag column
-        scopes=("a", "b"),         # the tag values the suite emits
-        headline=True,             # timed by bench.py
+        oracle="SELECT ...",  # or a zero-argument function returning it
+        tag="scope",          # suites only: the tag column
+        scopes=("a", "b"),    # the tag values the suite emits
+        headline=True,        # timed by bench.py
     )
     def q99_example(spark: SparkSession, sf_dir: str) -> DataFrame: ...
 
