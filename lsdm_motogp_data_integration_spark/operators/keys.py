@@ -12,11 +12,14 @@ serial counter:
   trade for dimension-sized inputs (the reference's sequences number
   68-2,704-row dims) but NOT for fact tables.
 - :func:`add_surrogate_key_distributed` — two-phase scalable variant for
-  fact-scale data: range-repartition by the order key, assign
-  partition-local row numbers, then add per-partition offsets computed
-  from partition counts (the same scheme as ``RDD.zipWithIndex``, kept
-  in DataFrame land). Output is identical to the global window when the
-  order key is unique.
+  fact-scale data: range-repartition by the order key, sort within each
+  partition, take partition-local positions from
+  ``monotonically_increasing_id()``, then add per-partition offsets
+  computed from partition counts (the same scheme as
+  ``RDD.zipWithIndex``, kept in DataFrame land). Output is identical to
+  the global window when the order key is unique. Under AQE a call runs
+  six eager jobs: range sampling, the range shuffle, the cache build,
+  the count's aggregate and result, and the checkpoint.
 """
 
 from __future__ import annotations
@@ -50,11 +53,14 @@ def add_surrogate_key_distributed(
     """Dense 1..N key without a global single-partition sort.
 
     Phase 1: range-repartition on the order key so partition *i* holds
-    globally smaller keys than partition *i+1*; assign local row numbers
-    per partition. Phase 2: one tiny job counts rows per partition;
-    cumulative offsets (driver-side, O(#partitions)) are added back as a
-    literal map. Equivalent to ``row_number() OVER (ORDER BY ...)`` for
-    unique order keys, but every phase is data-parallel.
+    globally smaller keys than partition *i+1*, sort each partition,
+    and stamp every row with one ``monotonically_increasing_id()`` —
+    partition id in the high bits, sorted position in the low 33.
+    Phase 2: one tiny job counts rows per partition; cumulative offsets
+    (driver-side, O(#partitions)) are added back as a literal map.
+    Equivalent to ``row_number() OVER (ORDER BY ...)`` for unique order
+    keys, but every phase is data-parallel and nothing re-shuffles the
+    range partitions.
     """
     cols = _cols(order_by)
     if num_partitions is None:
@@ -63,36 +69,32 @@ def add_surrogate_key_distributed(
         )
     ranged = (
         df.repartitionByRange(num_partitions, *cols)
-        .withColumn("__pid", F.spark_partition_id())
+        .sortWithinPartitions(*cols)
+        .withColumn("__mid", F.monotonically_increasing_id())
         # persist so the count job and the main job see one consistent
         # range partitioning (range boundaries come from sampling)
         .persist()
     )
+    pid = F.shiftright(F.col("__mid"), 33).cast("int")
     # try/finally: the count collect and the checkpoint run driver jobs
     # between persist and unpersist — an exception there (job killed,
     # OOM on a task, bad column) must not leak executor storage
     try:
-        counts = (
-            ranged.groupBy("__pid").count().orderBy("__pid").collect()
-        )
-        offsets: dict[int, int] = {}
-        acc = 0
-        for row in counts:
-            offsets[row["__pid"]] = acc
-            acc += row["count"]
+        counts = ranged.groupBy(pid.alias("__pid")).count().collect()
         kv: list[Column] = []
-        for pid, off in offsets.items():
-            kv.append(F.lit(pid))
-            kv.append(F.lit(off))
+        acc = 0
+        # ordered on the driver: O(#partitions) rows need no sort job
+        for row in sorted(counts, key=lambda r: r["__pid"]):
+            kv.append(F.lit(row["__pid"]))
+            kv.append(F.lit(acc))
+            acc += row["count"]
         offset_of = F.create_map(*kv)
-        local = Window.partitionBy("__pid").orderBy(*cols)
         result = ranged.withColumn(
             name,
-            (
-                F.row_number().over(local).cast("bigint")
-                + offset_of[F.col("__pid")]
-            ),
-        ).drop("__pid")
+            F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1))
+            + 1
+            + offset_of[pid],
+        ).drop("__mid")
         # Materialize the keyed output, then release the persisted range
         # partitioning — otherwise repeated calls in a long-lived session
         # leak executor storage. Prefer a RELIABLE checkpoint when the

@@ -260,10 +260,11 @@ def exact_quantiles(
     try:
         partials = ranged.groupBy("__pid").agg(
             F.sum("__c").alias("__s")
-        ).orderBy("__pid").collect()
+        ).collect()
         total = 0
         kv = []
-        for row in partials:
+        # ordered on the driver: O(#partitions) rows need no sort job
+        for row in sorted(partials, key=lambda r: r["__pid"]):
             kv.append(F.lit(row["__pid"]))
             kv.append(F.lit(total))
             total += row["__s"]

@@ -4,8 +4,11 @@ The reference reads 9 CSVs (header, ``"`` enclosure, UTF-8, declared
 typed field lists, e.g. ``motogp.ktr:1405-1478``) and 2 JSON files
 (JSONPath ``$[*].field`` over a flat array of flat objects,
 ``motogp.ktr:4281-4441``), and "writes" to named Dummy sinks /
-PostgreSQL. Here: schema-declared ``spark.read`` with no inference, and
-parquet-first writes (partitioned for scale).
+PostgreSQL. Here: schema-declared ``spark.read`` with no inference — CSV
+and JSON against the declared StructTypes of ``schemas.py``, parquet
+against the schema read from the file's footer on the driver
+(:func:`parquet_schema`) — and parquet-first writes (partitioned for
+scale).
 """
 
 from __future__ import annotations
@@ -88,20 +91,67 @@ def read_whole_files(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.format("binaryFile").load(path)
 
 
-def _ts_is_nanos(path: str) -> bool:
-    """True when the parquet file's ``ts`` column is TIMESTAMP(NANOS)
-    (which Spark's vectorized reader rejects without the legacy
-    nanos-as-long conf). Probed via the arrow footer so the session
-    conf is only touched when genuinely needed; on any probe failure
-    fall back to True — the legacy path handles every ts variant,
-    while missing the flag on a real nanos file fails the read."""
-    try:
-        import pyarrow.dataset as ds
+def _footer_file(path: str) -> tuple:
+    """The file whose footer stands for ``path``: the file itself, or
+    for a directory its first data part in name order (Spark skips
+    ``_``/``.``-prefixed entries such as ``_SUCCESS``). Local paths
+    and any URI scheme pyarrow's filesystems know are accepted."""
+    import os
 
-        t = ds.dataset(path, format="parquet").schema.field("ts").type
-        return getattr(t, "unit", None) == "ns"
-    except Exception:
-        return True
+    import pyarrow.fs as pafs
+
+    fs, p = pafs.FileSystem.from_uri(
+        path if "://" in path else os.path.abspath(path)
+    )
+    if fs.get_file_info(p).type == pafs.FileType.Directory:
+        parts = sorted(
+            i.path
+            for i in fs.get_file_info(pafs.FileSelector(p))
+            if i.is_file and not i.base_name.startswith(("_", "."))
+        )
+        if not parts:
+            raise FileNotFoundError(f"no parquet data file directly under {path}")
+        p = parts[0]
+    return fs, p
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema Spark would infer for the parquet file (or flat
+    directory of part files) at ``path``, read from one footer on the
+    driver, so the scan that declares it starts no inference job.
+
+    Naive timestamps map to TIMESTAMP_NTZ and tz-aware ones to
+    TIMESTAMP, as Spark's own reader does. Two top-level physical types
+    need Spark's view rather than arrow's: INT96 (the timestamp
+    encoding Spark writes by default) reads as TIMESTAMP, and
+    TIMESTAMP(NANOS) — rejected by Spark's reader unless
+    ``spark.sql.legacy.parquet.nanosAsLong`` is on — reads as BIGINT
+    nanos. That one-way session switch is set only when a footer
+    actually carries NANOS: set unconditionally it would turn every
+    later nanos-parquet scan of the session into bigint."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    fs, p = _footer_file(path)
+    with fs.open_input_file(p) as f:
+        pf = pq.ParquetFile(f)
+        arrow = pf.schema_arrow
+        physical = {
+            c.path: c.physical_type
+            for c in (pf.schema.column(i) for i in range(len(pf.schema)))
+        }
+    schema = from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+    fields = []
+    for af, sf in zip(arrow, schema.fields):
+        if pa.types.is_timestamp(af.type) and af.type.unit == "ns":
+            if physical.get(af.name) == "INT96":
+                sf = T.StructField(sf.name, T.TimestampType(), sf.nullable)
+            else:
+                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+                sf = T.StructField(sf.name, T.LongType(), sf.nullable)
+        fields.append(sf)
+    return T.StructType(fields)
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
@@ -124,12 +174,14 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver testdata table (TESTDATA.md).
+    """Load one driver testdata table (TESTDATA.md) with the schema
+    declared from its parquet footer (:func:`parquet_schema`): building
+    the scan starts no Spark job.
 
     ``events.ts`` has varied across testdata generations: parquet
-    TIMESTAMP(NANOS) (rejected by Spark's vectorized reader — read via
-    the legacy nanos-as-long path and convert) or TIMESTAMP(MICROS)
-    without timezone (read as TIMESTAMP_NTZ). Both are normalized to a
+    TIMESTAMP(NANOS) (rejected by Spark's vectorized reader — read as
+    BIGINT via the legacy nanos-as-long path and convert) or
+    TIMESTAMP(MICROS) without timezone (read as TIMESTAMP_NTZ). Both are normalized to a
     plain TIMESTAMP under the UTC session tz so downstream event-time
     code (watermarks, ``unix_micros``) sees one canonical type.
     """
@@ -146,17 +198,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             stacklevel=2,
         )
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events":
-        if _ts_is_nanos(f"{sf_dir}/{name}.parquet"):
-            # one-way legacy switch, set ONLY when the file actually
-            # carries TIMESTAMP(NANOS) — unconditional setting leaked
-            # bigint-instead-of-timestamp reads into every later
-            # nanos-parquet scan of the session
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_event_ts(
-            spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        )
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
+    return normalize_event_ts(df) if name == "events" else df
 
 
 def write_table(df: DataFrame, path: str, *, partition_by: list[str] | None = None) -> None:

@@ -20,26 +20,22 @@ def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
     file source only accepts directories, so a file path becomes its
     parent directory plus a glob filter).
 
-    The streaming file source requires a declared schema, and the
-    physical type of ``ts`` has varied across testdata generations
-    (TIMESTAMP(NANOS) vs TIMESTAMP(MICROS)); a one-file batch probe
-    resolves whichever is on disk, mirroring ``sources.read_table`` —
-    nanos surface as ``bigint`` under the legacy nanos-as-long flag
-    (set only when the footer actually carries NANOS, mirroring
-    ``sources._ts_is_nanos`` — an unconditional set would leak
-    bigint-typed reads into unrelated nanos-parquet scans) and are
-    converted to a microsecond timestamp after the scan."""
+    The streaming file source requires a declared schema: it is read
+    from the parquet footer by ``sources.parquet_schema``, the same
+    declaration ``sources.read_table`` uses (TIMESTAMP(NANOS) ``ts``
+    surfaces as ``bigint`` under the legacy nanos-as-long flag, set
+    only when the footer carries NANOS), and ``ts`` is converted to a
+    microsecond timestamp after the scan."""
     import os
 
     from lsdm_motogp_data_integration_spark.sources import (
-        _ts_is_nanos,
         normalize_event_ts,
+        parquet_schema,
     )
 
-    if _ts_is_nanos(path):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    probe = spark.read.parquet(path)
-    reader = spark.readStream.schema(probe.schema).format("parquet")
+    reader = spark.readStream.schema(parquet_schema(spark, path)).format(
+        "parquet"
+    )
     # the single-FILE branch must check the filesystem, not the name
     # suffix (a Spark-written DATASET directory is often *.parquet),
     # and the glob filter must escape glob metacharacters or a name

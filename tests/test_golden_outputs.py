@@ -63,12 +63,14 @@ def test_goldens_stable_under_different_partitioning():
     partitions — nothing divides evenly) must reproduce every golden
     fingerprint bit-for-bit. Runs in a subprocess because the session
     fixture pins this process's SparkSession conf."""
+    import os
     import subprocess
     import sys
 
-    code = """
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = f"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {root!r})
 from tests.test_golden_outputs import fingerprint, GOLDEN
 from lsdm_motogp_data_integration_spark.pipelines.motogp import runner
 from pyspark.sql import SparkSession
@@ -87,6 +89,6 @@ print("DIFFERS:" + ",".join(bad) if bad else "ALL-STABLE")
         capture_output=True,
         text=True,
         timeout=560,
-        cwd="/root/repo",
+        cwd=root,
     )
     assert "ALL-STABLE" in out.stdout, out.stdout[-2000:] + out.stderr[-2000:]

@@ -18,11 +18,31 @@ from lsdm_motogp_data_integration_spark.sources import read_table
 
 
 def test_distributed_key_equals_global_window(spark, sf_dir):
+    for table, order_by in [
+        ("customer", ["c_custkey"]),
+        ("lineitem", ["l_orderkey", "l_linenumber"]),
+    ]:
+        df = read_table(spark, sf_dir, table).select(*order_by)
+        a = add_surrogate_key(df, "sk", order_by)
+        for n in (1, 4, 7, 16):
+            b = add_surrogate_key_distributed(df, "sk", order_by, num_partitions=n)
+            assert a.exceptAll(b).count() == 0, (table, n)
+            assert b.exceptAll(a).count() == 0, (table, n)
+
+
+def test_distributed_key_eager_jobs(spark, sf_dir):
+    """Range sampling, the range shuffle, the cache build, the count's
+    aggregate and result, the checkpoint: no sort or window shuffle on
+    top of them."""
+    sc = spark.sparkContext
     c = read_table(spark, sf_dir, "customer").select("c_custkey")
-    a = add_surrogate_key(c, "sk", ["c_custkey"])
-    b = add_surrogate_key_distributed(c, "sk", ["c_custkey"], num_partitions=7)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+    group = "test_keys/add_surrogate_key_distributed"
+    sc.setJobGroup(group, group)
+    try:
+        add_surrogate_key_distributed(c, "sk", ["c_custkey"], num_partitions=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
 
 
 def test_keys_dense_from_one(spark):

@@ -13,6 +13,7 @@ Usage: python tools/check_correctness.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 import traceback
@@ -22,7 +23,7 @@ import pandas as pd
 
 
 def load_entry():
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry_mod
 
     return entry_mod

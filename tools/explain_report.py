@@ -7,9 +7,10 @@ Usage: python tools/explain_report.py > PLANS.md  (run from repo root)
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lsdm_motogp_data_integration_spark.plans import formatted_plan
 from lsdm_motogp_data_integration_spark.queries import registry
